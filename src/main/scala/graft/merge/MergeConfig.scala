@@ -309,8 +309,11 @@ object MergeConfig {
     * analogue) plus, when the spec declares a uuid column, the
     * initial→final uuid report under `output/<table>__uuid_report`
     * (uuid-checks.js:26; every-row regeneration when
-    * `generateNewUuids`, utils.js:55). Returns the per-table
-    * would/did counts DataFrame either way.
+    * `generateNewUuids`, utils.js:55). Returns the per-table report —
+    * (table_name, mode, src_rows, already_in_dest, would_insert) —
+    * either way: each table's one match decision, counted by one
+    * function, so the dry run and the real run report the same numbers
+    * for every mode.
     *
     * Source-once guard (preparation.js:71-75): a location already in
     * the `_merge_sources` registry must not merge twice — the
@@ -434,7 +437,7 @@ object MergeConfig {
     if (dryRun) Orchestrator.dryRun(tables, src, dest)
     else {
       import spark.implicits._
-      import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+      import org.apache.spark.sql.functions.{col, when}
       val jdbcOut = cfg.output.startsWith("jdbc:")
       // when the output IS the destination store (the reference's
       // in-place deployment; the sequential multi-source mode merges
@@ -548,31 +551,12 @@ object MergeConfig {
         (spec, pin(merged), uuidReport,
           if (cfg.persist) Some(pin(results(spec.name).idMap)) else None)
       }
-      // the final report rides the id maps the run JUST BUILT — no
-      // second pass over src/dest for the counts (the old terminal
-      // dryRun re-ran the whole matching workload, and under sameDb
-      // would have read post-overwrite tables); the dry-run-equals-
-      // actual spec pins these counts to dryRun's
-      val report = pin(Orchestrator.topoOrder(tables).map { spec =>
-        val counts = spec.mode match {
-          case MergeMode.Keyless =>
-            // keyless tables emit no id map — count from the merged
-            // output (src-instance rows ARE the appended set; the gap
-            // to the raw src count is INSERT IGNORE's affectedRows gap)
-            results(spec.name).merged.agg(
-              sum(when(col("instance") === "src", 1L).otherwise(0L)).as("src_rows"),
-              lit(0L).as("already_in_dest"),
-              sum(when(col("instance") === "src", 1L).otherwise(0L)).as("would_insert"))
-          case _ =>
-            results(spec.name).idMap.agg(
-              count(lit(1)).as("src_rows"),
-              sum(when(col("is_new") === 0, 1L).otherwise(0L)).as("already_in_dest"),
-              sum(when(col("is_new") === 1, 1L).otherwise(0L)).as("would_insert"))
-        }
-        counts.select(lit(spec.name).as("table_name"),
-            lit(Orchestrator.modeLabel(spec.mode)).as("mode"),
-            col("src_rows"), col("already_in_dest"), col("would_insert"))
-      }.reduce(_ unionAll _))
+      // the report rows were counted from the decisions the run JUST
+      // made, by the same counts function as the dry run — no second
+      // pass over src/dest (which under sameStore would read
+      // post-overwrite tables)
+      val report = pin(Orchestrator.topoOrder(tables).map(t => results(t.name).report)
+        .reduce(_ unionAll _))
       outputs.foreach { case (spec, merged, uuidReport, idMap) =>
         val t0 = System.nanoTime()
         uuidReport.foreach(publish(_, s"${spec.name}__uuid_report"))

@@ -30,7 +30,9 @@ object MergeOps {
     * Global order comes from deterministic value blocks that tile the
     * integral sort key's order; ids are block-local ranks plus
     * exclusive per-block offsets. The sort key must be integral and
-    * unique for the numbering to be deterministic.
+    * unique for the numbering to be deterministic, and non-null: a
+    * NULL key fails the job (raise_error in the block-key projection)
+    * instead of silently losing its row to the offsets join.
     */
   def assignSequentialIds(df: DataFrame, sortCol: String, idName: String, start: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -60,7 +62,9 @@ object MergeOps {
     // numbering nondeterministic), so no window partition ever exceeds
     // ~4.2M rows regardless of data size.
     val blockShift = 22
-    val blk = shiftright(col(sortCol).cast(LongType), blockShift)
+    val blk = when(col(sortCol).isNull,
+        raise_error(lit(s"assignSequentialIds: NULL sort key in column '$sortCol'")))
+      .otherwise(shiftright(col(sortCol).cast(LongType), blockShift))
     val withBlk = df.withColumn("__blk", blk)
     val wLocal = Window.partitionBy(col("__blk")).orderBy(col(sortCol))
     // EAGER lineage cut of the block-ranked frame: the one real pass
@@ -94,6 +98,43 @@ object MergeOps {
   def assignUniqueIds(df: DataFrame, idName: String, start: Long): DataFrame =
     df.withColumn(idName, monotonically_increasing_id() + start)
 
+  /** The match decision of one table — the single matcher behind
+    * consolidate (reference utils.js:83) and move (utils.js:161): one
+    * row (src_id, dest_id, is_new) per src row. A row whose `key`
+    * exists in the destination maps to the (minimum) dest id with that
+    * key, is_new = 0. With `uuidCol`, a row left unmatched on the key
+    * matches on the uuid instead. Every other row is new: is_new = 1
+    * and dest_id null until [[numberNew]] numbers it. Each leg is an
+    * equi-join against a per-key aggregate of dest. */
+  def matchDecision(src: DataFrame, dest: DataFrame, key: Seq[String], idCol: String,
+                    uuidCol: Option[String]): DataFrame = {
+    def destIds(on: String*) = dest.groupBy(on.map(col): _*)
+      .agg(min(col(idCol)).cast(LongType).as("dest_id"))
+    def decided(rows: DataFrame, destId: Column, isNew: Int) =
+      rows.select(col(idCol).cast(LongType).as("src_id"), destId.as("dest_id"), lit(isNew).as("is_new"))
+    val destK = destIds(key: _*)
+    val afterKey = src.join(destK, key, "left_anti")
+    val (byUuid, rest) = uuidCol match {
+      case Some(u) =>
+        val destU = destIds(u)
+        (Seq(decided(afterKey.join(destU, Seq(u)), col("dest_id"), 0)),
+          afterKey.join(destU, Seq(u), "left_anti"))
+      case None => (Nil, afterKey)
+    }
+    ((decided(src.join(destK, key), col("dest_id"), 0) +: byUuid) :+
+      decided(rest, lit(null).cast(LongType), 1)).reduce(_ unionAll _)
+  }
+
+  /** A decision's id map: the is_new = 0 rows as decided, the is_new =
+    * 1 rows numbered contiguously past `start` in src-id order. The
+    * filters prune the union's other legs at planning time, so the map
+    * scans and joins exactly what the decision does. */
+  def numberNew(decision: DataFrame, start: Long): DataFrame =
+    decision.filter(col("is_new") === 0).unionAll(
+      assignSequentialIds(decision.filter(col("is_new") === 1).select(col("src_id")),
+          "src_id", "dest_id", start)
+        .select(col("src_id"), col("dest_id"), lit(1).as("is_new")))
+
   /** Metadata dedup-merge by natural key (reference utils.js:83
     * consolidateTableRecords): rows whose natural key already exists in
     * the destination map to the (minimum) existing dest id; the rest get
@@ -101,27 +142,8 @@ object MergeOps {
     *
     * Returns the id map: (src_id, dest_id, is_new).
     */
-  def consolidate(src: DataFrame, dest: DataFrame, naturalKey: Seq[String], idCol: String,
-                  knownMaxId: Option[Long] = None): DataFrame = {
-    val destKeyed = dest.groupBy(naturalKey.map(col): _*)
-      .agg(min(col(idCol)).as("dest_id"))
-    val matched = src.join(destKeyed, naturalKey)
-      .select(col(idCol).as("src_id"), col("dest_id"), lit(0).as("is_new"))
-    // max() is an aggregate — driver receives one scalar, never rows.
-    // `knownMaxId` lets an orchestrator that prefetched every table's
-    // dest max CONCURRENTLY (Orchestrator.run, r14-opt) skip the
-    // serial inline action; the value is identical by construction.
-    val maxId = knownMaxId.getOrElse(dest.agg(max(col(idCol)).cast(LongType)).head() match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    })
-    val missing = src.join(destKeyed, naturalKey, "left_anti")
-      .select(col(idCol).cast(LongType).as("src_id"))
-    val assigned = assignSequentialIds(missing, "src_id", "dest_id", maxId)
-      .select(col("src_id"), col("dest_id"), lit(1).as("is_new"))
-    matched.select(col("src_id").cast(LongType), col("dest_id").cast(LongType), col("is_new"))
-      .unionAll(assigned)
-  }
+  def consolidate(src: DataFrame, dest: DataFrame, naturalKey: Seq[String], idCol: String): DataFrame =
+    numberNew(matchDecision(src, dest, naturalKey, idCol, None), Orchestrator.maxId(dest, idCol))
 
   /** Consolidation where one comparison column must itself be
     * rewritten through an already-established id map before matching

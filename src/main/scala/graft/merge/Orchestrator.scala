@@ -2,7 +2,7 @@ package graft.merge
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Generic dependency-ordered multi-table merge — the reference's core
   * deliverable re-expressed as a declarative plan builder
@@ -161,8 +161,9 @@ object Orchestrator {
     * with idCol/fks/selfFks REWRITTEN IN PLACE, plus lineage columns
     * `src_<idCol>` (original id), `instance` ('src'/'dest') and
     * `merge_source` (which source instance a row came from —
-    * orchestrator.js:92 insertSource). */
-  final case class MergedTable(merged: DataFrame, idMap: DataFrame)
+    * orchestrator.js:92 insertSource). `report` is the table's row of
+    * the merge report, counted as [[dryRun]] counts it. */
+  final case class MergedTable(merged: DataFrame, idMap: DataFrame, report: DataFrame)
 
   /** Kahn topological order over fk dependencies. Self-FKs are not
     * edges (they resolve against the table's own completed map).
@@ -196,44 +197,14 @@ object Orchestrator {
 
   /** Scalar max id from the destination — one aggregate action, no
     * rows to the driver (utils.js:11 getNextAutoIncrementId). */
-  private def maxId(dest: DataFrame, idCol: String): Long =
+  private[merge] def maxId(dest: DataFrame, idCol: String): Long =
     dest.agg(coalesce(max(col(idCol)), lit(0L)).cast(LongType)).head().getLong(0)
 
-  /** Move-mode id map: rows matching dest (natural key, then uuid for
-    * the remainder) map to their dest counterpart with is_new=0; the
-    * rest get contiguous ids past dest's max with is_new=1. */
-  private def moveIdMap(src: DataFrame, dest: DataFrame, spec: TableSpec,
-                        knownMaxId: Option[Long] = None): DataFrame = {
-    val key = effectiveKey(spec)
-    val destK = dest.groupBy(key.map(col): _*)
-      .agg(min(col(spec.idCol)).cast(LongType).as("dest_id"))
-    val byKey = src.join(destK, key)
-      .select(col(spec.idCol).cast(LongType).as("src_id"), col("dest_id"), lit(0).as("is_new"))
-    val afterKey = src.join(destK, key, "left_anti")
-    val (matched, unmatched) = spec.uuidCol match {
-      case Some(u) =>
-        val destU = dest.groupBy(col(u)).agg(min(col(spec.idCol)).cast(LongType).as("dest_id"))
-        val byUuid = afterKey.join(destU, Seq(u))
-          .select(col(spec.idCol).cast(LongType).as("src_id"), col("dest_id"), lit(0).as("is_new"))
-        (byKey.unionAll(byUuid), afterKey.join(destU, Seq(u), "left_anti"))
-      case None => (byKey, afterKey)
-    }
-    val assigned = MergeOps.assignSequentialIds(
-        unmatched.select(col(spec.idCol).cast(LongType).as("src_id")),
-        "src_id", "dest_id", knownMaxId.getOrElse(maxId(dest, spec.idCol)))
-      .select(col("src_id"), col("dest_id"), lit(1).as("is_new"))
-    matched.unionAll(assigned)
-  }
-
-  /** Id map for one table given its mode. Complete over ALL src rows
-    * (movers and already-present alike), so children and self-FKs
-    * always resolve. `mappedKeys` columns are rewritten through the
-    * parent maps before any matching — on the SRC side only, since
-    * dest values are already in the destination id space. */
-  /** src with mappedKeys columns rewritten into dest id space. LEFT
-    * join: a null/unmapped mapped key must NOT drop the row (the id
-    * map is contractually complete over all src rows) — it becomes a
-    * null key value, which matches no dest row and therefore
+  /** src with mappedKeys columns rewritten into dest id space — on the
+    * SRC side only, since dest values are already in the destination
+    * id space. LEFT join: a null/unmapped mapped key must NOT drop the
+    * row (the id map is contractually complete over all src rows) — it
+    * becomes a null key value, which matches no dest row and therefore
     * consolidates/moves as new. */
   private def withMappedKeys(src: DataFrame, spec: TableSpec,
                              parentMaps: String => DataFrame): DataFrame =
@@ -248,19 +219,40 @@ object Orchestrator {
   private def effectiveKey(spec: TableSpec): Seq[String] =
     spec.naturalKey ++ spec.mappedKeys.keys.filterNot(spec.naturalKey.contains)
 
-  def idMapFor(src: DataFrame, dest: DataFrame, spec: TableSpec,
-               parentMaps: String => DataFrame): DataFrame =
-    idMapMapped(withMappedKeys(src, spec, parentMaps), dest, spec, parentMaps)
+  /** The uuid match leg is Move's alone: a Consolidate table matches on
+    * its effective key only. */
+  private def uuidLeg(spec: TableSpec): Option[String] =
+    spec.uuidCol.filter(_ => spec.mode == MergeMode.Move)
 
-  /** SharedPk id map: the child's id joined through the PARENT's
-    * completed map (patient.js:25 `personMap.get(row['patient_id'])`) —
-    * dest_id AND the move decision (is_new) are both the parent's; no
-    * id is allocated. Inner join: a child id absent from the parent
-    * map (no such parent row in src) drops — the strict
-    * post-integrity-check path, same contract as remapFk "inner". */
-  private def sharedPkIdMap(src: DataFrame, spec: TableSpec, parentMap: DataFrame): DataFrame =
-    src.select(col(spec.idCol).cast(LongType).as("src_id"))
-      .join(parentMap.select(col("src_id"), col("dest_id"), col("is_new")), Seq("src_id"))
+  /** A keyed table's match decision: (src_id, dest_id, is_new) per src
+    * row, dest_id null for the rows still to be inserted
+    * ([[MergeOps.matchDecision]]: Consolidate on the effective key, Move
+    * on the key and then the uuid). `s` already has its mappedKeys in
+    * dest id space. A SharedPk table takes its parent's decision
+    * (patient.js:25 `personMap.get(row['patient_id'])`) from `parents`;
+    * given the parents' id maps instead, that decision IS its id map.
+    * Inner join: a child id absent from the parent (no such parent row
+    * in src) drops — the strict post-integrity-check path. */
+  private def decide(s: DataFrame, d: DataFrame, spec: TableSpec,
+                     parents: String => DataFrame): DataFrame =
+    spec.mode match {
+      case MergeMode.SharedPk(p) =>
+        s.select(col(spec.idCol).cast(LongType).as("src_id"))
+          .join(parents(p).select(col("src_id"), col("dest_id"), col("is_new")), Seq("src_id"))
+      case _ => MergeOps.matchDecision(s, d, effectiveKey(spec), spec.idCol, uuidLeg(spec))
+    }
+
+  /** A keyed table's id map, complete over ALL src rows (movers and
+    * already-present alike) so children and self-FKs always resolve:
+    * its decision with the new rows numbered past `start`, the dest max
+    * id. A SharedPk table allocates nothing — its decision through the
+    * parents' maps is its map. */
+  private def idMapOf(s: DataFrame, d: DataFrame, spec: TableSpec,
+                      maps: String => DataFrame, start: => Long): DataFrame =
+    spec.mode match {
+      case MergeMode.SharedPk(_) => decide(s, d, spec, maps)
+      case _                     => MergeOps.numberNew(decide(s, d, spec, maps), start)
+    }
 
   /** Schema-correct EMPTY id map (Keyless tables emit no map but
     * [[MergedTable]] carries one for API uniformity). */
@@ -268,18 +260,23 @@ object Orchestrator {
     src.sparkSession.range(0).select(
       col("id").as("src_id"), col("id").as("dest_id"), lit(1).as("is_new"))
 
-  /** As [[idMapFor]], but `srcMapped` already has mappedKeys in dest
-    * id space. */
-  private def idMapMapped(srcMapped: DataFrame, dest: DataFrame, spec: TableSpec,
-                          parentMaps: String => DataFrame,
-                          knownMaxId: Option[Long] = None): DataFrame =
-    spec.mode match {
-      case MergeMode.Consolidate =>
-        MergeOps.consolidate(srcMapped, dest, effectiveKey(spec), spec.idCol, knownMaxId)
-      case MergeMode.Move        => moveIdMap(srcMapped, dest, spec, knownMaxId)
-      case MergeMode.SharedPk(p) => sharedPkIdMap(srcMapped, spec, parentMaps(p))
-      case MergeMode.Keyless     => emptyIdMap(srcMapped)
-    }
+  /** One table's report row — (table_name, mode, src_rows,
+    * already_in_dest, would_insert) — the one place the dry run and the
+    * real run count, in one aggregate pass. already_in_dest and
+    * would_insert count `decided`'s is_new = 0 and is_new = 1 rows (a
+    * keyed table's decision or id map, a keyless table's decided
+    * batch). src_rows counts `decided` too, or `rawSrc` when given: a
+    * keyless table reports its raw src rows, batch duplicates
+    * included. */
+  private def reportRow(spec: TableSpec, decided: DataFrame, rawSrc: Option[DataFrame]): DataFrame =
+    (rawSrc.map(_.select(lit(true).as("__src"), lit(null).cast(IntegerType).as("is_new"))).toSeq :+
+      decided.select(lit(rawSrc.isEmpty).as("__src"), col("is_new")))
+      .reduce(_ unionAll _)
+      .agg(count(when(col("__src"), 1)).as("src_rows"),
+        count(when(col("is_new") === 0, 1)).as("already_in_dest"),
+        count(when(col("is_new") === 1, 1)).as("would_insert"))
+      .select(lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
+        col("src_rows"), col("already_in_dest"), col("would_insert"))
 
   /** Keyless association-table merge (MergeMode.Keyless): FK rewrite
     * through the parents' completed maps (inner_or_null — the strict
@@ -292,9 +289,11 @@ object Orchestrator {
     *     is scheduler luck;
     *   - naturalKey empty → append-all (gaac.js:100: the destination
     *     mints auto ids the merge never sees).
-    * Emits an empty id map — nothing can FK-reference these rows.
-    * Scale: one shuffle per fk map join + (keyed form) one dedup
-    * aggregate on the composite key; never a window, never a sort. */
+    * Emits an empty id map — nothing can FK-reference these rows — and
+    * a report row counted from the raw src rows and the batch's
+    * decision (the dry run's row too). Scale: one shuffle per fk map
+    * join + (keyed form) one dedup aggregate on the composite key;
+    * never a window, never a sort. */
   private def keylessMerge(src: DataFrame, dest: DataFrame, spec: TableSpec,
                            maps: String => DataFrame, sourceTag: String): MergedTable = {
     val fkDone0 = spec.fks.foldLeft(src) { case (df, (fkCol, parent)) =>
@@ -304,8 +303,9 @@ object Orchestrator {
     }
     val cols = src.columns.toSeq
     val fkDone = fkDone0.select(cols.map(col): _*)
-    val incoming =
-      if (spec.naturalKey.isEmpty) fkDone
+    // the batch's decision: is_new = 0 where its key is already in dest
+    val decided =
+      if (spec.naturalKey.isEmpty) fkDone.withColumn("is_new", lit(1))
       else {
         val payload = cols.filterNot(spec.naturalKey.contains)
         val batchDeduped =
@@ -314,14 +314,17 @@ object Orchestrator {
             .agg(min(struct(payload.map(col): _*)).as("__p"))
             .select(cols.map(c =>
               if (spec.naturalKey.contains(c)) col(c) else col(s"__p.$c").as(c)): _*)
-        batchDeduped.join(
-          dest.select(spec.naturalKey.map(col): _*).distinct(), spec.naturalKey, "left_anti")
+        batchDeduped.join(dest.select(spec.naturalKey.map(col): _*).distinct()
+            .withColumn("__hit", lit(1)), spec.naturalKey, "left")
+          .select(cols.map(col) :+ when(col("__hit").isNull, 1).otherwise(0).as("is_new"): _*)
       }
-    val srcOut = incoming.select((cols.map(col) :+
+    val srcOut = decided.filter(col("is_new") === 1).select((cols.map(col) :+
       lit("src").as("instance") :+ lit(sourceTag).as("merge_source")): _*)
     val destOut = dest.select((cols.map(col) :+
       lit("dest").as("instance") :+ lit("dest").as("merge_source")): _*)
-    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src))
+    // src_rows counts the RAW src table, batch duplicates included (the
+    // gap INSERT IGNORE's affectedRows shows)
+    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), reportRow(spec, decided, Some(src)))
   }
 
   /** Fill `saltedFks` from each OPTED-IN spec's own fk histograms
@@ -379,19 +382,21 @@ object Orchestrator {
       val d = dest(spec.name)
       // the id map has 3+ consumers (this table's movers join and
       // self-FK remap, every child's FK remap); by default each
-      // re-derives it from lineage, which is SAFE
-      // (assignSequentialIds is a deterministic range-sort +
-      // numbering) and measured faster than a persist() round-trip
-      // when the run has the machine to itself. `pinIdMaps` eagerly
-      // cuts each map once instead (localCheckpoint) so every
-      // consumer reads the materialized frame — the wall is similar
+      // re-derives it from lineage, which is SAFE: the numbering is a
+      // deterministic block rank whose one pass over the input is cut
+      // eagerly inside assignSequentialIds, so every consumer reads the
+      // same ranked blocks, and re-deriving the rest measured faster
+      // than a persist() round-trip when the run has the machine to
+      // itself. `pinIdMaps` eagerly cuts each map once instead
+      // (localCheckpoint) so every consumer reads the materialized
+      // frame — the wall is similar
       // in isolation (the deepest chain dominates either way, the r7
       // measurement) but TOTAL CPU drops ~3×, which is what matters
       // when the run shares the machine with concurrent pipelines
       // (the bench's artifact phase) . At 100 TB the map for a
       // fact-sized table should instead be WRITTEN once (a parquet id
       // table, the reference's durable mapping) and read by consumers.
-      val idMap0 = idMapMapped(s, d, spec, maps, knownMaxIds.get(spec.name))
+      val idMap0 = idMapOf(s, d, spec, maps, knownMaxIds(spec.name))
       val idMap = if (pinIdMaps) idMap0.localCheckpoint(true) else idMap0
       maps(spec.name) = idMap
 
@@ -433,7 +438,7 @@ object Orchestrator {
           col(spec.idCol).cast(LongType).as(s"src_${spec.idCol}") :+
           lit("dest").as("instance") :+
           lit("dest").as("merge_source")).toIndexedSeq: _*)
-      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap)
+      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, reportRow(spec, idMap, None))
       }
     }.toMap
 
@@ -469,135 +474,63 @@ object Orchestrator {
               .otherwise(col(fkCol)))
             .drop("__dfk_src", "__dfk_dest")
         }
-        name -> MergedTable(merged, mt.idMap)
+        name -> mt.copy(merged = merged)
       }
     }
   }
 
   /** Dry-run (reference orchestrator.js:26 `--dry-run`: full rehearsal,
-    * then ROLLBACK): per-table would-happen counts as ONE DataFrame —
-    * a pure plan over the id maps, zero writes. The reference rehearses
-    * by executing then rolling back; a declarative engine can report
-    * the same numbers without executing the merge at all. */
+    * then ROLLBACK): per-table would-happen counts as ONE DataFrame,
+    * zero writes. The reference rehearses by executing then rolling
+    * back; here each table makes the same single match decision
+    * [[run]] numbers its id map from, and the same report row counts
+    * it, so the dry run and the real run report the same numbers for
+    * every mode. The dry run allocates no ids: a real id map is built
+    * only where a child's matching reads destination ids — mappedKeys
+    * parents and Keyless tables' fk parents (the set-union key matches
+    * in dest id space), plus, transitively, a needed SharedPk table's
+    * parent. A SharedPk child takes its parent's decision. */
   def dryRun(specs: Seq[TableSpec],
              src: String => DataFrame, dest: String => DataFrame): DataFrame = {
-    val maps = scala.collection.mutable.Map.empty[String, DataFrame]
-    // only parents whose map another table's DECISION depends on need a
-    // REAL id map (its construction runs the dest-max scalar action):
-    // mappedKeys parents, SharedPk parents (the decision IS the
-    // parent's is_new) and Keyless tables' fk parents (the set-union
-    // key matches in dest id space). Transitive: a needed SharedPk
-    // parent's own map needs ITS parent's map. Every other table's dry
-    // count is pure semi/anti-join shape.
     val byName = specs.map(s => s.name -> s).toMap
-    val mapConsumers = scala.collection.mutable.Set.empty[String]
-    def needMap(n: String): Unit = if (mapConsumers.add(n)) byName(n).mode match {
+    val mapNeeded = scala.collection.mutable.Set.empty[String]
+    def needMap(n: String): Unit = if (mapNeeded.add(n)) byName(n).mode match {
       case MergeMode.SharedPk(p) => needMap(p)
       case _                     => ()
     }
     specs.foreach { s =>
       s.mappedKeys.values.foreach(needMap)
-      s.mode match {
-        case MergeMode.SharedPk(p) => needMap(p)
-        case MergeMode.Keyless     => s.fks.values.foreach(needMap)
-        case _                     => ()
-      }
+      if (s.mode == MergeMode.Keyless) s.fks.values.foreach(needMap)
     }
+    val decisions = scala.collection.mutable.Map.empty[String, DataFrame]
+    val maps = scala.collection.mutable.Map.empty[String, DataFrame]
     topoOrder(specs).map { spec =>
-      if (spec.mode == MergeMode.Keyless) keylessDryRow(src(spec.name), dest(spec.name), spec, maps)
+      if (spec.mode == MergeMode.Keyless)
+        keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").report
       else {
-      val s = withMappedKeys(src(spec.name), spec, maps)
-      val d = dest(spec.name)
-      // children's dry shapes still thread the REAL parent maps (their
-      // mappedKeys must land in dest id space before matching)
-      if (mapConsumers(spec.name)) maps(spec.name) = idMapMapped(s, d, spec, maps)
-      // counts need only the match DECISION per src row, not ids —
-      // semi/anti joins replicate idMapMapped's matching (the SAME
-      // effective key: naturalKey + mappedKeys, then uuid for the Move
-      // remainder) with no range sort, no zipWithIndex jobs, no
-      // dest-max action. The OrchestratorSpec dry-run-equals-actual
-      // test pins this equivalence.
-      val shape = spec.mode match {
-        case MergeMode.SharedPk(p) =>
-          // the decision IS the parent's: join src ids through the
-          // parent's real map (ids absent from it drop, as in the run)
-          s.select(col(spec.idCol).cast(LongType).as("src_id"))
-            .join(maps(p).select(col("src_id"), col("is_new")), Seq("src_id"))
-            .select(col("is_new"))
-        case _ =>
-          val key = effectiveKey(spec)
-          val destKeys = d.select(key.map(col): _*).distinct()
-          val matchedKey = s.join(destKeys, key, "left_semi")
-            .select(lit(0).as("is_new"))
-          val rest = s.join(destKeys, key, "left_anti")
-          spec.uuidCol.filter(_ => spec.mode == MergeMode.Move) match {
-            case Some(u) =>
-              val destU = d.select(col(u)).distinct()
-              matchedKey
-                .unionAll(rest.join(destU, Seq(u), "left_semi").select(lit(0).as("is_new")))
-                .unionAll(rest.join(destU, Seq(u), "left_anti").select(lit(1).as("is_new")))
-            case None =>
-              matchedKey.unionAll(rest.select(lit(1).as("is_new")))
-          }
-      }
-      shape.agg(
-          count(lit(1)).as("src_rows"),
-          sum(when(col("is_new") === 0, 1L).otherwise(0L)).as("already_in_dest"),
-          sum(when(col("is_new") === 1, 1L).otherwise(0L)).as("would_insert"))
-        .select(
-          lit(spec.name).as("table_name"),
-          lit(modeLabel(spec.mode)).as("mode"),
-          col("src_rows"), col("already_in_dest"), col("would_insert"))
+        val s = withMappedKeys(src(spec.name), spec, maps)
+        val d = dest(spec.name)
+        decisions(spec.name) = decide(s, d, spec, decisions)
+        if (mapNeeded(spec.name)) maps(spec.name) = idMapOf(s, d, spec, maps, maxId(d, spec.idCol))
+        reportRow(spec, decisions(spec.name), None)
       }
     }.reduce(_ unionAll _)
   }
 
-  private[merge] def modeLabel(mode: MergeMode): String = mode match {
+  private def modeLabel(mode: MergeMode): String = mode match {
     case MergeMode.Consolidate => "consolidate"
     case MergeMode.Move        => "move"
     case MergeMode.SharedPk(_) => "shared_pk"
     case MergeMode.Keyless     => "keyless"
   }
 
-  /** Keyless dry-run row: src_rows counts the RAW src table (what the
-    * reference's getCount reports); already_in_dest / would_insert
-    * replicate [[keylessMerge]] exactly (FK rewrite through the real
-    * parent maps, batch dedup, key match against dest), so
-    * `would_insert` equals the rows the actual run appends. With
-    * internal batch duplicates src_rows > already + would — the same
-    * gap INSERT IGNORE's affectedRows shows. */
-  private def keylessDryRow(s: DataFrame, d: DataFrame, spec: TableSpec,
-                            maps: String => DataFrame): DataFrame = {
-    val fkDone0 = spec.fks.foldLeft(s) { case (df, (fkCol, parent)) =>
-      MergeOps.remapFk(df, fkCol, maps(parent), s"__new_$fkCol", joinType = "inner_or_null")
-        .drop(fkCol).withColumnRenamed(s"__new_$fkCol", fkCol)
-    }
-    val srcRows = s.agg(count(lit(1)).as("src_rows"))
-    val decided =
-      if (spec.naturalKey.isEmpty)
-        fkDone0.agg(lit(0L).as("already_in_dest"), count(lit(1)).as("would_insert"))
-      else {
-        val batch = fkDone0.dropDuplicates(spec.naturalKey)
-        val destKeys = d.select(spec.naturalKey.map(col): _*).distinct()
-        batch.join(destKeys, spec.naturalKey, "left_semi").select(lit(0).as("is_new"))
-          .unionAll(batch.join(destKeys, spec.naturalKey, "left_anti").select(lit(1).as("is_new")))
-          .agg(
-            sum(when(col("is_new") === 0, 1L).otherwise(0L)).as("already_in_dest"),
-            sum(when(col("is_new") === 1, 1L).otherwise(0L)).as("would_insert"))
-      }
-    srcRows.crossJoin(decided).select(
-      lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
-      col("src_rows"),
-      coalesce(col("already_in_dest"), lit(0L)).as("already_in_dest"),
-      coalesce(col("would_insert"), lit(0L)).as("would_insert"))
-  }
-
   /** Declarative exclusion set for one table (preparation.js:134): the
     * src ids that would NOT move because a dest row matches on the
     * spec's cross-instance identity (effectiveKey: naturalKey +
     * mappedKeys, the SAME composite the Move-mode id map uses — this
-    * is exactly its is_new=0 side, exposed as an id list) OR its uuid.
-    * Specs with mappedKeys need the parents' completed maps. */
+    * is exactly its is_new=0 side, exposed as an id list) OR, for a
+    * Move spec, its uuid — the id map's rule. Specs with mappedKeys
+    * need the parents' completed maps. */
   def excludedIds(src: DataFrame, dest: DataFrame, spec: TableSpec,
                   parentMaps: String => DataFrame =
                     name => sys.error(s"excludedIds: parent map for '$name' required by mappedKeys"))
@@ -614,7 +547,7 @@ object Orchestrator {
       case _ =>
         val s = withMappedKeys(src, spec, parentMaps)
         val key = effectiveKey(spec)
-        spec.uuidCol match {
+        uuidLeg(spec) match {
           case Some(u) => MergeOps.excludeMoved(s, dest, key, u, spec.idCol)
           case None =>
             s.join(dest.select(key.map(col): _*).distinct(), key, "left_semi")

@@ -121,9 +121,9 @@ object OrchestratorQueries {
         instance(spark, dir, isSrc = true), instance(spark, dir, isSrc = false), SourceTag,
         pinIdMaps = true)
     })
-    raw.map { case (t, mt) => t -> Orchestrator.MergedTable(
-      graft.operators.Indexes.memo(s"m13run:${sr.token}:$dir:$t:merged")(mt.merged),
-      graft.operators.Indexes.memo(s"m13run:${sr.token}:$dir:$t:idmap")(mt.idMap)) }
+    raw.map { case (t, mt) => t -> mt.copy(
+      merged = graft.operators.Indexes.memo(s"m13run:${sr.token}:$dir:$t:merged")(mt.merged),
+      idMap = graft.operators.Indexes.memo(s"m13run:${sr.token}:$dir:$t:idmap")(mt.idMap)) }
   }
 
   def m13FullPipeline(spark: SparkSession, dir: String): DataFrame = {

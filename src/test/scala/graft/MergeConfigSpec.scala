@@ -141,6 +141,73 @@ class MergeConfigSpec extends AnyFunSuite {
     assert(rep == Map("u1" -> 1, "u2" -> 0))
   }
 
+  test("dry run and real run report the same five columns for every mode") {
+    val base = java.nio.file.Files.createTempDirectory("graft-cfg-modes").toString
+    val (srcDir, destDir, outDir) = (s"$base/src", s"$base/dest", s"$base/out")
+    def write(dir: String, name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.parquet(s"$dir/$name.parquet")
+    // location: src 3 shares a uuid with dest 11 but not a name, which a
+    // Consolidate table does not match on
+    write(srcDir, "location", Seq((1L, "north", "u1"), (2L, "south", "u2"), (3L, "east", "u9"))
+      .toDF("location_id", "name", "uuid"))
+    write(destDir, "location", Seq((10L, "north", "u1"), (11L, "west", "u9"))
+      .toDF("location_id", "name", "uuid"))
+    // customer: ann matches on name, cat on uuid, bob is new; a self FK
+    // and a deferred FK onto orders close the customer <-> orders cycle
+    write(srcDir, "customer", Seq(
+        (1L, "ann", 1L, None, Some(100L), "c1"), (2L, "bob", 2L, Some(1L), Some(101L), "c2"),
+        (3L, "cat", 3L, Some(2L), None, "cx"))
+      .toDF("c_custkey", "c_name", "c_locationkey", "referred_by", "first_order", "cuuid"))
+    val none = Option.empty[Long]
+    write(destDir, "customer", Seq(
+        (20L, "ann", 10L, none, none, "d1"), (21L, "dan", 11L, none, none, "cx"))
+      .toDF("c_custkey", "c_name", "c_locationkey", "referred_by", "first_order", "cuuid"))
+    write(srcDir, "orders", Seq((100L, "r1", 1L), (101L, "r2", 2L), (102L, "r3", 3L))
+      .toDF("o_orderkey", "o_ref", "o_custkey"))
+    write(destDir, "orders", Seq((200L, "r1", 20L)).toDF("o_orderkey", "o_ref", "o_custkey"))
+    write(srcDir, "customer_profile", Seq((1L, "p1"), (2L, "p2"), (3L, "p3"))
+      .toDF("c_custkey", "bio"))
+    write(destDir, "customer_profile", Seq((20L, "p0")).toDF("c_custkey", "bio"))
+    // keyless: (100, a) lands as (200, a), already in dest, and twice in
+    // the batch; (101, b) is duplicated within the batch
+    write(srcDir, "order_tag", Seq((100L, "a", "n1"), (100L, "a", "n2"), (101L, "b", "n3"),
+        (101L, "b", "n4"), (102L, "c", "n5")).toDF("o_orderkey", "tag", "note"))
+    write(destDir, "order_tag", Seq((200L, "a", "n0")).toDF("o_orderkey", "tag", "note"))
+    val cfg = MergeConfig.fromJson(
+      s"""{
+         |  "source": {"path": "$srcDir", "location": "instanceB"},
+         |  "destination": {"path": "$destDir"},
+         |  "output": "$outDir",
+         |  "generateNewUuids": false,
+         |  "tables": [
+         |    {"name": "location", "idCol": "location_id", "mode": "consolidate",
+         |     "naturalKey": ["name"], "uuidCol": "uuid"},
+         |    {"name": "customer", "idCol": "c_custkey", "mode": "move",
+         |     "naturalKey": ["c_name"], "uuidCol": "cuuid",
+         |     "fks": {"c_locationkey": "location"}, "selfFks": ["referred_by"],
+         |     "deferredFks": {"first_order": "orders"}},
+         |    {"name": "orders", "idCol": "o_orderkey", "mode": "move",
+         |     "naturalKey": ["o_ref"], "fks": {"o_custkey": "customer"}},
+         |    {"name": "customer_profile", "idCol": "c_custkey", "mode": "shared_pk",
+         |     "sharedPkParent": "customer"},
+         |    {"name": "order_tag", "mode": "keyless", "naturalKey": ["o_orderkey", "tag"],
+         |     "fks": {"o_orderkey": "orders"}}
+         |  ]
+         |}""".stripMargin)
+    def rows(dryRun: Boolean) = MergeConfig.execute(spark, cfg, dryRun).collect()
+      .map(r => r.getAs[String]("table_name") -> ((r.getAs[String]("mode"),
+        r.getAs[Long]("src_rows"), r.getAs[Long]("already_in_dest"), r.getAs[Long]("would_insert"))))
+      .toMap
+    val dry = rows(dryRun = true)
+    assert(dry == Map(
+      "location" -> (("consolidate", 3L, 1L, 2L)),
+      "customer" -> (("move", 3L, 2L, 1L)),
+      "orders" -> (("move", 3L, 1L, 2L)),
+      "customer_profile" -> (("shared_pk", 3L, 2L, 1L)),
+      "order_tag" -> (("keyless", 5L, 1L, 2L))))
+    assert(rows(dryRun = false) == dry)
+  }
+
   test("source-once guard: re-merging a processed location throws; persist publishes id maps") {
     val (srcDir, destDir, outDir) = writeInstances()
     val cfg = MergeConfig.fromJson(

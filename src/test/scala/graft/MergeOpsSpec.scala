@@ -30,6 +30,13 @@ class MergeOpsSpec extends AnyFunSuite {
     assert(r.map(_.toSeq).toSeq == r2.map(_.toSeq).toSeq)
   }
 
+  test("assignSequentialIds fails loudly on a NULL sort key instead of dropping its row") {
+    val df = Seq(Some(30L), None, Some(10L)).toDF("k")
+    val e = intercept[Exception](MergeOps.assignSequentialIds(df, "k", "nid", 100L).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("NULL sort key in column 'k'")), e)
+  }
+
   test("remapFk joinType: left preserves unmatched/null FKs, inner drops them") {
     val child = Seq((1L, Some(10L)), (2L, Some(99L)), (3L, None))
       .toDF("id", "fk")

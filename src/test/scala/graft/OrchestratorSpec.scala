@@ -456,6 +456,28 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(excl == Set(1L))
   }
 
+  test("excludedIds follows the id map's rule: a Consolidate spec never matches on its uuid") {
+    // src 2 shares its uuid with dest 11 but not its name
+    val s = Seq((1L, "alpha", "u1"), (2L, "beta", "u9")).toDF("id", "name", "uuid")
+    val d = Seq((10L, "alpha", "u0"), (11L, "gamma", "u9")).toDF("id", "name", "uuid")
+    val spec = TableSpec("t", "id", Seq("name"), MergeMode.Consolidate, uuidCol = Some("uuid"))
+    val excluded = Orchestrator.excludedIds(s, d, spec).collect().map(_.getLong(0)).toSet
+    val kept = Orchestrator.run(Seq(spec), Map("t" -> s), Map("t" -> d), "inst2")("t").idMap
+      .filter($"is_new" === 0).collect().map(_.getAs[Long]("src_id")).toSet
+    assert(kept == Set(1L))
+    assert(excluded == kept)
+  }
+
+  test("a NULL src id on a row to insert fails the merge instead of vanishing from it") {
+    val s = Seq((Some(1L), "alpha"), (None, "beta")).toDF("id", "name")
+    val d = Seq((10L, "gamma")).toDF("id", "name")
+    val specs = Seq(TableSpec("t", "id", Seq("name"), MergeMode.Move))
+    val e = intercept[Exception](
+      Orchestrator.run(specs, Map("t" -> s), Map("t" -> d), "inst2")("t").merged.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("NULL sort key")), e)
+  }
+
   test("SharedPk table as a parent: grandchild FKs ride the shared-pk map (patient_identifier shape)") {
     val srcPerson = Seq((1L, "alpha"), (2L, "beta")).toDF("id", "name")
     val destPerson = Seq((10L, "alpha")).toDF("id", "name")
@@ -508,6 +530,12 @@ class OrchestratorSpec extends AnyFunSuite {
           x.getAs[Long]("already_in_dest"), x.getAs[Long]("would_insert")))).toMap
     // src_rows counts the RAW table; already/would count POST-dedup keys
     assert(dry("user_role") == (("keyless", 3L, 1L, 1L)))
+    // the real run reports the same row for every table
+    val reported = specs.map(t => r(t.name).report).reduce(_ unionAll _).collect()
+      .map(x => x.getAs[String]("table_name") ->
+        ((x.getAs[String]("mode"), x.getAs[Long]("src_rows"),
+          x.getAs[Long]("already_in_dest"), x.getAs[Long]("would_insert")))).toMap
+    assert(reported == dry)
 
     // append-all (empty naturalKey — the gaac_member auto-id shape):
     // every fk-rewritten row lands, duplicates included

@@ -33,6 +33,10 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("the query registry is built once, not per lookup") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+  }
+
   test("all queries run non-empty on sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()

@@ -25,6 +25,11 @@ collision-bound by design of the sf1 corpus (10 verbatim clones per row
 -> true-pair volume grows ~100x per clone family), not a plan defect.
 Each entry carries its reason and a WIDER budget, not a free pass.
 
+CEILINGS: an entry whose ratio was raised because its sf0.1 denominator
+got faster also carries an absolute sf1 ceiling, so denominator drift
+cannot hide growth in the sf1 time. Such a query is flagged when it
+exceeds either limit.
+
 Exit code 1 on any flag, so it can gate a round record.
 """
 import json, re, sys, os
@@ -87,6 +92,14 @@ WHITELIST = {
     "g5_bfs_hops": (5.5, "per-round fixed job latency dominates the ~1 s sf0.1 reading; sf1 numerator flat 3.9-4.9 s and sub-linear at 10x rows"),
 }
 
+# query -> absolute sf1 ceiling in seconds, for the whitelist entries whose
+# ratio was re-based on a faster sf0.1 denominator. Each sits above the
+# recorded sf1 readings: mm7 3.1-3.7 s, g5 3.9-4.9 s.
+SF1_CEILING_S = {
+    "mm7_phash_neardup": 4.5,
+    "g5_bfs_hops": 6.0,
+}
+
 
 def main():
     argv = sys.argv[1:]
@@ -123,6 +136,10 @@ def main():
             flags.append(f"FAIL  {name}: failed in a bench run (sf1={a}, sf0.1={b})")
             continue
         checked += 1
+        ceiling = SF1_CEILING_S.get(name)
+        if ceiling is not None and a > ceiling:
+            flags.append(f"REGR  {name}: {a:.2f}s at sf1 exceeds its {ceiling}s ceiling")
+            continue
         if a <= 3.0 or a - b <= 1.0:
             continue  # below the significance floor: fixed job latency
                       # dominates, the ratio carries no scaling signal
