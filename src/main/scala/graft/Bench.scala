@@ -25,32 +25,44 @@ object Bench {
     }
   }
 
+  /** The one stdout line, `{"metric":"total",...}`: the total over the
+    * non-failed entries and a per-entry map. The line must stay SHORT:
+    * the harness keeps only the last ~2000 chars of output and a longer
+    * line gets front-clipped past "metric", so the metric line is
+    * unparseable (observed rounds 1-3). If the map would not fit in
+    * 1800 chars, the fastest entries are dropped from it (count
+    * reported as "dropped") — slow queries are the ones per-round
+    * comparison needs. */
+  private[graft] def metricLine(results: Seq[(String, Double)], sfDir: String): String = {
+    val total = results.map(_._2).filter(_ >= 0).sum
+    def line(entries: Seq[(String, Double)], dropped: Int): String = {
+      val qs = entries.map { case (k, v) => "\"" + k + "\":" + num(v) }
+        .mkString("{", ",", "}")
+      val drop = if (dropped > 0) s""","dropped":$dropped""" else ""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs$drop,"sf":"${
+        Paths.get(sfDir).getFileName}"}"""
+    }
+    // the stored output tail is ~2000 chars and sbt's success trailer
+    // (~80 chars) rides after the line; 1800 keeps the whole line
+    // inside the tail with margin. (1850 got the r5 line front-clipped
+    // when the trailer ran longer.)
+    val budget = 1800
+    // failed entries (-1.0) are pinned into the kept set — sorted by
+    // "slowest" they'd rank as the fastest and be dropped FIRST,
+    // erasing the failure marker from the published line
+    val (failedQ, okQ) = results.partition(_._2 < 0)
+    val bySlowest = okQ.sortBy(-_._2)
+    var keep = bySlowest.size
+    def kept(k: Int) = (failedQ ++ bySlowest.take(k)).sortBy(_._1)
+    while (keep > 1 && line(kept(keep), bySlowest.size - keep).length > budget)
+      keep -= 1
+    line(kept(keep), bySlowest.size - keep)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.maxPlanStringLength", 1000000)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // e9's optimizer rule (and the SQL function surface) live in the
-      // extensions — without this line e9 times the nested loop it
-      // exists to eliminate
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // count(*)-style audits read parquet row-group metadata, not rows
-      .config("spark.sql.parquet.aggregatePushDown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // WindowExec's "No Partition Defined for Window" WARN is pinned to
-    // PrefixSum.blockCum's deliberate ≤#blocks offset window (see its
-    // scaladoc + the PropertySpec gate) — drop that one logger so the
-    // bench tail doesn't read like a scale hazard
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(s"local[$cpus]")
     // absorb JVM/codegen/scan warmup so per-query numbers are steady-state
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     SparkEntry.queries.get("q1_pricing_summary").foreach(_(spark, sfDir).count())
@@ -79,6 +91,14 @@ object Bench {
     // not each other — fork them after d2 lands instead of chaining
     // (chain 1 was the local critical path with all four serial)
     val d2Done = new java.util.concurrent.CountDownLatch(1)
+    // POOL INVARIANT (what keeps the shared pool deadlock-free): every
+    // chain runs on `sharedArtifactPool`, which has a worker for each
+    // chain plus headroom, and only m13_run blocks on futures submitted
+    // to that pool; its inner tasks block on nothing. Every other step
+    // finishes without waiting on pool work (g3_gate waits on chain 1's
+    // latch, and chain 1 always holds a worker). A new step must not
+    // submit-and-wait on the pool: with every worker blocked, its
+    // futures could never start.
     val artifactChains: Seq[Seq[(String, () => Unit)]] = Seq(
       Seq(
         "sig_index"    -> (() => { graft.dedup.Dedup.sigIndex(spark, sfDir).count(); () }),
@@ -184,9 +204,8 @@ object Bench {
     // runnable and bounds the EXTRA in-flight work to a cores-derived
     // headroom: chains + max(2, cpus/8) (32 cores → 12 in flight,
     // down from r13's 16; 8 cores → 10, the shape whose phase the
-    // driver's own c8 run already accepted). Only m13_run blocks on
-    // pool-internal futures and every other task terminates
-    // independently, so the shared pool cannot deadlock.
+    // driver's own c8 run already accepted). Deadlock freedom: the
+    // POOL INVARIANT at `artifactChains`.
     val artifactWorkers = artifactChains.size + math.max(2, cpus.toInt / 8)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(artifactWorkers)
     Bench.sharedArtifactPool = pool
@@ -252,21 +271,8 @@ object Bench {
     }
     val results = ("_artifacts" -> (if (artifactsFailed) -1.0 else artifactsSec)) +: perQuery
     val total = results.map(_._2).filter(_ >= 0).sum
-    def line(entries: Seq[(String, Double)], dropped: Int): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + num(v) }
-        .mkString("{", ",", "}")
-      val drop = if (dropped > 0) s""","dropped":$dropped""" else ""
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs$drop,"sf":"${
-        Paths.get(sfDir).getFileName}"}"""
-    }
     // Full-precision record for the repo (BENCH_FULL.json, committed
-    // per round). The stdout line must stay SHORT: the harness keeps
-    // only the last ~2000 chars of output and a longer line gets
-    // front-clipped past "metric", so the metric line is unparseable
-    // (observed rounds 1-3). Budget leaves room for the sbt trailer;
-    // if the map still would not fit, the fastest queries are dropped
-    // from the map (count reported as "dropped") — slow queries are
-    // the ones per-round comparison needs.
+    // per round); the stdout line is [[metricLine]]'s trimmed map.
     val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val artQs = artifactTimes.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -293,21 +299,7 @@ object Bench {
     }
     System.err.println(f"[bench] cache TOTAL ${rs.map(_.memSize).sum / 1048576.0}%.1f MB mem " +
       f"${rs.map(_.diskSize).sum / 1048576.0}%.1f MB disk over ${rs.length} frames")
-    // the stored output tail is ~2000 chars and sbt's success trailer
-    // (~80 chars) rides after the line; 1800 keeps the whole line
-    // inside the tail with margin. (1850 got the r5 line front-clipped
-    // when the trailer ran longer.)
-    val budget = 1800
-    // failed entries (-1.0) are pinned into the kept set — sorted by
-    // "slowest" they'd rank as the fastest and be dropped FIRST,
-    // erasing the failure marker from the published line
-    val (failedQ, okQ) = results.partition(_._2 < 0)
-    val bySlowest = okQ.sortBy(-_._2)
-    var keep = bySlowest.size
-    def kept(k: Int) = (failedQ ++ bySlowest.take(k)).sortBy(_._1)
-    while (keep > 1 && line(kept(keep), bySlowest.size - keep).length > budget)
-      keep -= 1
-    println(line(kept(keep), bySlowest.size - keep))
+    println(metricLine(results, sfDir))
     spark.stop()
   }
 }

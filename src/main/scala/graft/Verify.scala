@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,25 +17,7 @@ object Verify {
       s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(",")}")
     def selected(name: String) = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.maxPlanStringLength", 1000000)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // e9's optimizer rule + the SQL function surface
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); Spark reads them as
-      // long nanos with this flag (Tables.events converts back).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // benign by design: blockCum's ≤#blocks offset window (PrefixSum
-    // scaladoc); silence the one WARN it triggers
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession(s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     // ORACLE-ORDERING CONTRACT: registered operators return UNORDERED
     // frames (a 100 TB caller must not pay a corpus-wide sort for

@@ -577,7 +577,8 @@ object MergeConfig {
 }
 
 /** CLI: `runMain graft.merge.MergeMain <config.json> [--dry-run]` —
-  * the reference's `node orchestrator.js [--dry-run]`. */
+  * the reference's `node orchestrator.js [--dry-run]`. Runs on
+  * [[graft.GraftSession]] at `SPARK_MASTER` (default: local, all cores). */
 object MergeMain {
   /** The CLI body minus session lifecycle: parse argv, load the
     * config, execute it (or print the rollback plan), print the
@@ -605,12 +606,8 @@ object MergeMain {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${Runtime.getRuntime.availableProcessors}]"))
-      .config("spark.sql.maxPlanStringLength", 1000000)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${Runtime.getRuntime.availableProcessors}]"))
     try run(args, spark)
     finally spark.stop()
   }

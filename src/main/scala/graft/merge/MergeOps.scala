@@ -33,6 +33,16 @@ object MergeOps {
     * unique for the numbering to be deterministic, and non-null: a
     * NULL key fails the job (raise_error in the block-key projection)
     * instead of silently losing its row to the offsets join.
+    *
+    * KEY DENSITY: the cost assumes dense keys. The partition-less
+    * offsets window and `broadcast(offs)` are sized by the number of
+    * 2^22-wide value blocks the keys touch — rows / 4M for
+    * auto-increment-style ids, the merge's case. Sparse keys (hash-
+    * derived, or spread across ±2^40) touch about one block per row,
+    * so the window becomes a single-partition pass over ~all rows and
+    * the broadcast a rows-sized table. The numbering stays correct
+    * either way (PropertySpec covers sparse keys); only the cost
+    * changes.
     */
   def assignSequentialIds(df: DataFrame, sortCol: String, idName: String, start: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -92,11 +102,6 @@ object MergeOps {
       .withColumn(idName, (lit(start) + col("__boff") + col("__rn")).cast(LongType))
       .drop("__blk", "__rn", "__boff")
   }
-
-  /** Non-contiguous but globally unique ids — the cheap path when the
-    * destination doesn't require dense sequences (one pass, no sort). */
-  def assignUniqueIds(df: DataFrame, idName: String, start: Long): DataFrame =
-    df.withColumn(idName, monotonically_increasing_id() + start)
 
   /** The match decision of one table — the single matcher behind
     * consolidate (reference utils.js:83) and move (utils.js:161): one

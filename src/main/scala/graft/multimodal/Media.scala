@@ -523,12 +523,12 @@ object Media {
     * sf1 run measured the band join super-linear at 9× cost for 10×
     * rows). `segs = 64` (the classic DCT pHash width) gives 8-bit
     * keys — 256 values per band, 16× the bucket space: measured on
-    * the sf1 clone corpus (BenchMm7), segs=64 runs 2.5 s warm vs
+    * the sf1 clone corpus (SURVEY §18-§19), segs=64 runs 2.5 s warm vs
     * segs=32's 10.7 s and keeps every TRUE clone pair while dropping
     * the noise pairs the 4-bit floor lets through. The REGISTERED
     * query runs segs=64 — the plan you'd run at 100× — over the
     * corpus ⊎ PLANTED RE-ENCODE VARIANTS (below); segs=32 stays as
-    * BenchMm7's priced contrast.
+    * the priced contrast recorded there.
     *
     * PLANTED VARIANTS (`plantEvery`): the synthetic corpus has exact
     * clones (mm4's job) but no true perceptual near-dups — different
@@ -542,7 +542,7 @@ object Media {
     * reason to exist), near-identical gray signature (hamming ≲ 2).
     * One corpus scan: the variant rides a bounded 2-element explode,
     * never a second read. `plantEvery = 0` disables planting (the
-    * pure-corpus contrast BenchMm7 runs).
+    * pure-corpus contrast SURVEY §19 prices).
     *
     * The "decode" here is the stub family's gray signature: `segs`
     * equal byte-segments of the payload, segment mean vs global mean

@@ -1190,11 +1190,11 @@ object TextAnalysis {
   private val bpeMemo =
     scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Long, String, Long)]]
 
-  /** @param onRound per-round instrumentation hook (round index,
-    *                 seconds) — the depth-cost audit (BenchBpe) reads
-    *                 the curve through it; no-op in production. */
-  private[graft] def bpeMergeTable(spark: SparkSession, dir: String, rounds: Int,
-                                   onRound: (Int, Double) => Unit = (_, _) => ())
+  /** The trained merge table, one training run per (dir, rounds).
+    * Priced at realistic depth (32 rounds at sf0.01) in SURVEY §13:
+    * per-round cost is flat after round 0, and the 32-deep encoder
+    * plan compiles and runs (DedupTextSpec keeps that check). */
+  private[graft] def bpeMergeTable(spark: SparkSession, dir: String, rounds: Int)
   : Seq[(Long, String, Long)] =
     bpeMemo.getOrElseUpdate((dir, rounds), {
       import spark.implicits._
@@ -1222,7 +1222,6 @@ object TextAnalysis {
       // generations (the registry's bounded-cache contract — the old
       // swapWith path freed its half-born generation on failure)
       try while (r < rounds && !dry) {
-        val tRound = System.nanoTime()
         // pair_counts collapses each doc to its pair histogram BEFORE
         // the aggregate (one map per doc instead of one row per
         // character position — bit-identical counts, see
@@ -1247,7 +1246,6 @@ object TextAnalysis {
                 lit((0xE000 + r).toChar.toString)).as("text")))
           }
           merges += ((r.toLong, pair, cnt))
-          onRound(r, (System.nanoTime() - tRound) / 1e9)
           r += 1
         }
       } finally {

@@ -989,6 +989,15 @@ class DedupTextSpec extends AnyFunSuite {
     assert(enc.getAs[Long]("compression_e6") == 300000L)
   }
 
+  test("BPE at realistic depth: 32 merge rounds train and the 32-deep encoder runs") {
+    // the registered default of 5 rounds is a demo; a tokenizer trains
+    // tens of merges, and the encoder is one plan of 32 chained
+    // replace projections that must still compile (SURVEY §13)
+    val merges = TextAnalysis.t20BpeMerges(spark, sf, rounds = 32).collect()
+    assert(merges.map(_.getAs[Long]("round")).toSeq == (0L until 32L))
+    assert(TextAnalysis.t21BpeEncode(spark, sf, rounds = 32).collect().nonEmpty)
+  }
+
   test("t22 LM score: smoothed probabilities bounded, bigram counts consistent") {
     val r = TextAnalysis.t22LmScore(spark, "/root/testdata/sf0.001").collect()
     assert(r.length == 500)
@@ -1067,7 +1076,7 @@ class DedupTextSpec extends AnyFunSuite {
       (3L, "zzz qqq xxx completely unrelated noise 000 111 222 333 444 555 666 777 888 999 aaa bbb", "en", "p2", 88L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // the 32-bit contrast width on the pure corpus (BenchMm7's shape)
+    // the 32-bit contrast width on the pure corpus (SURVEY §19's priced contrast)
     val r = graft.multimodal.Media
       .mm7PhashNearDup(spark, dir, segs = 32, plantEvery = 0).collect()
     val pairs = r.map(x => (x.getAs[Long]("doc_id1"), x.getAs[Long]("doc_id2"))

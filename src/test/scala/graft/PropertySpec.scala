@@ -20,14 +20,17 @@ class PropertySpec extends AnyFunSuite {
     g.apply(params, Seed(seed)).getOrElse(sys.error("gen failed"))
 
   test("assignSequentialIds is a contiguous bijection for any key set") {
-    for (s <- 1L to 8L) {
-      val keys = sample(Gen.listOfN(40, Gen.choose(-100000L, 100000L)), s).distinct
+    // dense keys (±100000) fall into at most two 2^22-wide value
+    // blocks; sparse keys (±2^40) put nearly every row in its own
+    // block, so the offsets window carries ~one row per input row
+    for (bound <- Seq(100000L, 1L << 40); s <- 1L to 8L) {
+      val keys = sample(Gen.listOfN(40, Gen.choose(-bound, bound)), s).distinct
       val ids = MergeOps.assignSequentialIds(keys.toDF("k"), "k", "nid", 7L)
         .collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("nid"))
       // contiguous range starting past `start`, one id per row
-      assert(ids.map(_._2).sorted.toSeq == (8L to 7L + keys.length).toSeq, s"seed $s")
+      assert(ids.map(_._2).sorted.toSeq == (8L to 7L + keys.length).toSeq, s"bound $bound seed $s")
       // order-preserving in the sort key
-      assert(ids.sortBy(_._1).map(_._2).toSeq == ids.map(_._2).sorted.toSeq, s"seed $s")
+      assert(ids.sortBy(_._1).map(_._2).toSeq == ids.map(_._2).sorted.toSeq, s"bound $bound seed $s")
     }
   }
 

@@ -75,7 +75,7 @@ WHITELIST = {
     # 20^2 per planted family, ARE the answer's evidence). Measured
     # ratio band 2.6-5.5x across load samples - the sf0.1 denominator
     # (0.6-1.4 s) flaps more than the sf1 reading (3.1-3.6 s).
-    # BenchMm7 keeps segs=32 as the priced contrast (6.5x slower,
+    # SURVEY §19 records segs=32 as the priced contrast (6.5x slower,
     # 313,900 noise pairs).
     # r14 re-base: the round's across-the-board speedups pulled mm7's
     # sf0.1 denominator to a steady 0.51-0.57 s (two consecutive
