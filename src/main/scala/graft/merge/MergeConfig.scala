@@ -3,6 +3,7 @@ package graft.merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import graft.operators.{Overlap, State}
 import graft.sources.AtomicSnapshot
 import Orchestrator.{MergeMode, TableSpec}
 
@@ -321,7 +322,11 @@ object MergeConfig {
     * `persist = true` each table's src→dest id map is also published
     * durably (`output/<table>__idmap`, preparation.js:53 — the
     * reference's beehive_merge_* map tables), the 100 TB answer to
-    * per-consumer map recomputation.
+    * per-consumer map recomputation. Each id map is cut once, as the
+    * merge builds it, and the report is cut to the driver before the
+    * first publish. The outputs — merged tables, uuid reports, id maps
+    * — are independent writes and publish concurrently (a `jdbc:`
+    * output one at a time).
     *
     * A `jdbc:` output writes every merged table INTO the live
     * database instead (the reference's actual shape — it inserts
@@ -334,14 +339,14 @@ object MergeConfig {
     * a portable unquoted SQL identifier). Crash semantics match the
     * parquet path's argument rather than the reference's single-
     * connection ROLLBACK (a distributed write has no global txn):
-    * provenance is recorded LAST, so a mid-run crash leaves the
-    * source unrecorded and the rerun's overwrites repair every
-    * partially-written table. */
+    * provenance is recorded LAST, after every output has finished
+    * publishing, so a mid-run crash leaves the source unrecorded and
+    * the rerun's overwrites repair every partially-written table. */
   /** Canonical form of a store path for identity comparison: JDBC
     * URLs compare verbatim; filesystem paths are stripped of trailing
     * slashes and URI-normalized (dot segments, duplicate separators)
     * so every spelling of the same directory triggers the sameStore
-    * pinning in [[execute]]. */
+    * cut in [[execute]]. */
   private[graft] def canonicalStore(p: String): String =
     if (p.startsWith("jdbc:")) p
     else new org.apache.hadoop.fs.Path(
@@ -425,13 +430,16 @@ object MergeConfig {
     // memoized per (transport, table): jdbcTableAuto issues an EAGER
     // driver-side bounds query — the orchestrator, uuid-report and
     // dry-run paths each re-read tables, and without the cache every
-    // call would hit the live database again for the same bounds
+    // call would hit the live database again for the same bounds. The
+    // skew audits open readers from Overlap threads, so the cache is
+    // locked: each reader, and each bounds query, is made once.
     val readerCache = scala.collection.mutable.Map.empty[(String, String), DataFrame]
-    def reader(base: String)(name: String): DataFrame =
+    def reader(base: String)(name: String): DataFrame = readerCache.synchronized {
       readerCache.getOrElseUpdate((base, name),
         if (base.startsWith("jdbc:"))
           graft.sources.Tables.jdbcTableAuto(spark, base, name, idColOf.get(name))
         else spark.read.parquet(s"$base/$name.parquet"))
+    }
     val src = reader(cfg.source.path) _
     val dest = reader(cfg.destination.path) _
     if (dryRun) Orchestrator.dryRun(tables, src, dest)
@@ -444,20 +452,30 @@ object MergeConfig {
       // each source INTO the previous merge's output), publishing
       // table A mutates data that table B's still-lazy plan reads —
       // drop-and-recreate on JDBC, rename-swap on parquet. Under
-      // sameStore every output frame is eagerly pinned below before
-      // the first publish runs. Compare NORMALIZED forms, not raw
-      // strings — a trailing slash or dot-segment spelling of the
-      // same directory would silently disable the pinning and let a
+      // sameStore every merged table and uuid report is cut below
+      // before the first publish runs. Compare NORMALIZED forms, not
+      // raw strings — a trailing slash or dot-segment spelling of the
+      // same directory would silently disable the cut and let a
       // rename-swap publish corrupt a sibling table's lazy plan
       // (AtomicSnapshot/Compaction normalize the same hazard class).
       val sameStore = canonicalStore(cfg.output) == canonicalStore(cfg.destination.path)
-      def pin(df: DataFrame): DataFrame = if (sameStore) df.localCheckpoint(true) else df
-      def publish(df: DataFrame, name: String): Unit =
+      def pin(df: DataFrame): DataFrame = if (sameStore) State.cut(df) else df
+      // per-output progress to stderr as each output COMMITS — the
+      // reference's display-utils/logOk surface (a long multi-table
+      // merge is otherwise silent between Spark job lines); stderr so
+      // MergeMain's stdout report lines stay machine-readable
+      // ASCII marker: the JVM's default console charset mangles
+      // non-ASCII on plain terminals
+      def logOk(msg: String): Unit = System.err.println(s"[graft-merge] OK $msg")
+      def publish(df: DataFrame, name: String): Unit = {
+        val t0 = System.nanoTime()
         if (jdbcOut) graft.sources.Tables.JdbcSink(cfg.output, name).save(df, "overwrite")
         // `.parquet` suffix = the instance READER's naming, so a
         // published output dir is directly usable as the next merge's
         // destination (the reference's sequential multi-source mode)
         else AtomicSnapshot.publish(df, s"${cfg.output}/$name.parquet")
+        logOk(f"$name: published in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      }
       val registryName = if (jdbcOut) "graft_merge_sources" else "_merge_sources"
       val processed =
         if (jdbcOut)
@@ -505,21 +523,16 @@ object MergeConfig {
       // fill audit-driven salts BEFORE the movers plan their map joins
       // (default-ON: every table runs the one-scan hotShare audit and
       // only provably-hot relations salt; "autoSaltFks": false opts a
-      // table out entirely)
+      // table out entirely). Orchestrator.run cuts every keyed table's
+      // id map as it builds it.
       val results = Orchestrator.run(
         Orchestrator.autoSaltFks(tables, src), src, dest, cfg.source.location)
-      // per-table progress to stderr as each table COMMITS — the
-      // reference's display-utils/logOk surface (a long multi-table
-      // merge is otherwise silent between Spark job lines); stderr so
-      // MergeMain's stdout report lines stay machine-readable
-      // ASCII marker: the JVM's default console charset mangles
-      // non-ASCII on plain terminals
-      def logOk(msg: String): Unit = System.err.println(s"[graft-merge] OK $msg")
       val tMergeAll = System.nanoTime()
-      // BUILD (and under sameDb eagerly pin) every output frame before
-      // the FIRST publish: frames lazily re-read live destination
-      // tables, and a drop-and-recreate of table A must not corrupt
-      // table B's not-yet-materialized plan
+      // BUILD every output frame, and under sameStore cut it, before
+      // the FIRST publish: merged tables and uuid reports lazily re-read
+      // live destination tables, and a drop-and-recreate of table A
+      // must not corrupt table B's not-yet-materialized plan. The id
+      // maps need no cut here: they are materialized already.
       val outputs = tables.map { spec =>
         // the uuid report is not just documentation: moved rows are
         // PUBLISHED with their final uuids (collision repairs in keep
@@ -549,26 +562,31 @@ object MergeConfig {
           case None => (results(spec.name).merged, None)
         }
         (spec, pin(merged), uuidReport,
-          if (cfg.persist) Some(pin(results(spec.name).idMap)) else None)
+          if (cfg.persist) Some(results(spec.name).idMap) else None)
       }
       // the report rows were counted from the decisions the run JUST
       // made, by the same counts function as the dry run — no second
       // pass over src/dest (which under sameStore would read
-      // post-overwrite tables)
-      val report = pin(Orchestrator.topoOrder(tables).map(t => results(t.name).report)
-        .reduce(_ unionAll _))
-      outputs.foreach { case (spec, merged, uuidReport, idMap) =>
-        val t0 = System.nanoTime()
-        uuidReport.foreach(publish(_, s"${spec.name}__uuid_report"))
-        publish(merged, spec.name)
-        idMap.foreach(publish(_, s"${spec.name}__idmap"))
-        logOk(f"${spec.name}: published${if (spec.uuidCol.isDefined) " (+uuid report)" else ""}" +
-          f"${if (cfg.persist) " (+id map)" else ""} in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
+      // post-overwrite tables). Cut to the driver before the first
+      // publish: the caller's collect then runs no job.
+      val report = State.cutToDriver(Orchestrator.topoOrder(tables)
+        .map(t => results(t.name).report).reduce(_ unionAll _))
+      // every uuid report, merged table and id map is an independent
+      // write, so they publish concurrently. A JDBC output keeps one
+      // publish in flight: concurrent drop-and-recreate DDL on the
+      // embedded engines is untested. A failed publish lets the running
+      // ones finish and starts no other before it is rethrown.
+      Overlap.map(outputs.flatMap { case (spec, merged, uuidReport, idMap) =>
+        Seq[() => Unit](
+          () => uuidReport.foreach(publish(_, s"${spec.name}__uuid_report")),
+          () => publish(merged, spec.name),
+          () => idMap.foreach(publish(_, s"${spec.name}__idmap")))
+      }, maxThreads = if (jdbcOut) 1 else 8)(_())
       logOk(f"${tables.size} tables from '${cfg.source.location}' merged in " +
         f"${(System.nanoTime() - tMergeAll) / 1e9}%.1f s")
-      // record provenance LAST — a crash above leaves the source
-      // unrecorded and the run safely repeatable (orchestrator.js:94)
+      // record provenance LAST, after every publish above has finished
+      // — a crash above leaves the source unrecorded and the run safely
+      // repeatable (orchestrator.js:94)
       publish(
         (processed + cfg.source.location).toSeq.sorted.toDF("location"), registryName)
       report

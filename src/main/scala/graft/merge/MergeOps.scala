@@ -77,8 +77,8 @@ object MergeOps {
       .otherwise(shiftright(col(sortCol).cast(LongType), blockShift))
     val withBlk = df.withColumn("__blk", blk)
     val wLocal = Window.partitionBy(col("__blk")).orderBy(col(sortCol))
-    // EAGER lineage cut of the block-ranked frame: the one real pass
-    // over the input. The offsets branch, the numbering join and every
+    // EAGER lineage cut (State.cut) of the block-ranked frame: the one
+    // real pass over the input. The offsets branch, the numbering join and every
     // downstream plan reference of the id map then read these blocks
     // instead of re-deriving the input per reference (the old
     // zipWithIndex shape re-ran its hidden RDD lineage — including the
@@ -87,9 +87,8 @@ object MergeOps {
     // post-cut consumer plans). The session-scope analogue of the
     // production contract in the scaladoc above: an id table is
     // WRITTEN once and read by consumers, never re-derived.
-    val local = withBlk
-      .withColumn("__rn", row_number().over(wLocal).cast(LongType))
-      .localCheckpoint(true)
+    val local = graft.operators.State.cut(withBlk
+      .withColumn("__rn", row_number().over(wLocal).cast(LongType)))
     // exclusive per-block offsets: the only partition-less window,
     // over ≤#blocks aggregate rows (the PrefixSum.blockCum level-2
     // convention, whitelist-pinned in QueriesSpec)
@@ -375,11 +374,11 @@ object MergeOps {
     * impacted parent's ids through the declared fks (deferredFks are
     * excluded on purpose: a deferred audit column nulls out, it does
     * not cascade). Only the node-sized impacted-ID frames are
-    * materialized (eager localCheckpoint), and only for tables a
-    * child will consume — lazy lineage would re-derive the semi-join
-    * chain per consumer, while the row-sized impacted slices stay
-    * unmaterialized (fact-sized at 100 TB; a count re-derives one
-    * cheap semi-join instead).
+    * materialized (an eager [[graft.operators.State.cut]]), and only
+    * for tables a child will consume — lazy lineage would re-derive
+    * the semi-join chain per consumer, while the row-sized impacted
+    * slices stay unmaterialized (fact-sized at 100 TB; a count
+    * re-derives one cheap semi-join instead).
     *
     * Returns (table_name, n_impacted), one row per spec, seed table
     * included. */
@@ -421,7 +420,7 @@ object MergeOps {
         case Some(i) =>
           if (hasChildren)
             impactedIds(spec.name) =
-              i.select(col(spec.idCol)).dropDuplicates(spec.idCol).localCheckpoint()
+              graft.operators.State.cut(i.select(col(spec.idCol)).dropDuplicates(spec.idCol))
           i.agg(count(lit(1)).as("n_impacted"))
         case None => df.sparkSession.range(1).select(lit(0L).as("n_impacted"))
       }

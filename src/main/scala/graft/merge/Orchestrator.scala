@@ -14,17 +14,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * is DATA — a `Seq[TableSpec]` (the reference's config surface,
   * preparation.js:134: match columns, exclusions, per-table modes) —
   * and the orchestrator topologically orders it and threads id maps as
-  * DataFrames. Nothing is collected: each table's merge is one
-  * declarative plan whose inputs are its parents' id-map plans, so
-  * Catalyst sees the whole lineage; id-map join strategy is left to
-  * Spark's size-based auto-broadcast (metadata maps broadcast,
-  * person-scale maps shuffle — never a forced hint that would OOM the
-  * driver on a fact-sized map).
+  * DataFrames. Nothing is collected: like beehive's maps, each id map
+  * is built once — cut ([[graft.operators.State.cut]]) as soon as it
+  * exists — and every consumer reads its materialized blocks; each
+  * table's merged frame is one declarative plan over them. Id-map join
+  * strategy is left to Spark's size-based auto-broadcast (metadata
+  * maps broadcast, person-scale maps shuffle — never a forced hint
+  * that would OOM the driver on a fact-sized map).
   *
   * Scale notes (100 TB): per-table work is the m1/m2/m9 shape — one
-  * range-sort for id assignment, semi/anti-joins for exclusion, map
+  * block rank for id assignment, semi/anti-joins for exclusion, map
   * joins for FK rewrite. The orchestrator adds NO driver state beyond
-  * the spec list and NO extra shuffles: id maps are reused DataFrames,
+  * the spec list and NO extra shuffles: id maps are cut DataFrames,
   * broadcast when dimension-sized, shuffled when person-scale.
   */
 object Orchestrator {
@@ -336,19 +337,36 @@ object Orchestrator {
     * without the flag are returned untouched (zero audit cost). */
   def autoSaltFks(specs: Seq[TableSpec], src: String => DataFrame,
                   hotShare: Double = 0.125, maxBuckets: Int = 32): Seq[TableSpec] =
-    specs.map { t =>
-      if (!t.autoSaltFks) t
-      else {
-        val candidates = (t.fks.keys ++ t.selfFks).toSeq.distinct
-          .filterNot(t.saltedFks.contains)
-        val auto = graft.operators.Skew.autoBucketsAll(
-          src(t.name), candidates, hotShare, maxBuckets)
-        if (auto.isEmpty) t else t.copy(saltedFks = t.saltedFks ++ auto)
-      }
+    // the audits are independent one-scan jobs: overlap them
+    graft.operators.Overlap.map(specs)(t => autoSaltFks(t, src, hotShare, maxBuckets))
+
+  /** One table's audit. A named method, not a lambda, so each audit job's
+    * call stack names `autoSaltFks` on an Overlap thread too (the
+    * benchmark's trace rule for merge.skew_audit_s). */
+  private def autoSaltFks(t: TableSpec, src: String => DataFrame,
+                          hotShare: Double, maxBuckets: Int): TableSpec =
+    if (!t.autoSaltFks) t
+    else {
+      val candidates = (t.fks.keys ++ t.selfFks).toSeq.distinct
+        .filterNot(t.saltedFks.contains)
+      val auto = graft.operators.Skew.autoBucketsAll(
+        src(t.name), candidates, hotShare, maxBuckets)
+      if (auto.isEmpty) t else t.copy(saltedFks = t.saltedFks ++ auto)
     }
 
   /** Run the full pipeline: topological order, id maps threaded
     * parents→children, merged output per table.
+    *
+    * EAGER in its id maps: each keyed table's map is cut
+    * ([[graft.operators.State.cut]]) exactly once, as soon as it is
+    * built, so its children's FK remaps, its own movers and self-FK
+    * remap, the deferred FKs, the merged frame and the report all read
+    * the materialized blocks (the reference's `src_id → dest_id` map,
+    * built once in memory — utils.js:161). An uncut map would be
+    * re-derived by each consumer, its decision and numbering joins and
+    * all its ancestors' with it. A failure inside an id map (a NULL id
+    * on a row to insert) therefore throws here. The merged frames stay
+    * lazy.
     *
     * @param src/dest   table name → instance DataFrame
     * @param sourceTag  provenance label recorded on every row moved
@@ -356,7 +374,7 @@ object Orchestrator {
     */
   def run(specs: Seq[TableSpec],
           src: String => DataFrame, dest: String => DataFrame,
-          sourceTag: String, pinIdMaps: Boolean = false): Map[String, MergedTable] = {
+          sourceTag: String): Map[String, MergedTable] = {
     val maps = scala.collection.mutable.Map.empty[String, DataFrame]
     // r14-opt (guide §2.6): every Consolidate/Move table's dest
     // max-id scalar depends ONLY on the raw destination table, yet
@@ -380,24 +398,10 @@ object Orchestrator {
       // new rows must land in dest with dest-space key values
       val s = withMappedKeys(src(spec.name), spec, maps)
       val d = dest(spec.name)
-      // the id map has 3+ consumers (this table's movers join and
-      // self-FK remap, every child's FK remap); by default each
-      // re-derives it from lineage, which is SAFE: the numbering is a
-      // deterministic block rank whose one pass over the input is cut
-      // eagerly inside assignSequentialIds, so every consumer reads the
-      // same ranked blocks, and re-deriving the rest measured faster
-      // than a persist() round-trip when the run has the machine to
-      // itself. `pinIdMaps` eagerly cuts each map once instead
-      // (localCheckpoint) so every consumer reads the materialized
-      // frame — the wall is similar
-      // in isolation (the deepest chain dominates either way, the r7
-      // measurement) but TOTAL CPU drops ~3×, which is what matters
-      // when the run shares the machine with concurrent pipelines
-      // (the bench's artifact phase) . At 100 TB the map for a
-      // fact-sized table should instead be WRITTEN once (a parquet id
-      // table, the reference's durable mapping) and read by consumers.
-      val idMap0 = idMapOf(s, d, spec, maps, knownMaxIds(spec.name))
-      val idMap = if (pinIdMaps) idMap0.localCheckpoint(true) else idMap0
+      // cut once (see above). At 100 TB a fact-sized table's map should
+      // instead be WRITTEN once as a parquet id table (the reference's
+      // durable mapping) and read back.
+      val idMap = graft.operators.State.cut(idMapOf(s, d, spec, maps, knownMaxIds(spec.name)))
       maps(spec.name) = idMap
 
       // src rows that produce NEW dest rows; their id becomes dest_id

@@ -114,12 +114,8 @@ object OrchestratorQueries {
     // call rather than silently bypassed forever.
     val sr = sessionRuns(spark)
     val raw = sr.runs.getOrElseUpdate(dir, {
-      // pinIdMaps: this run's six frames materialize CONCURRENTLY in
-      // the bench artifact phase alongside four other chains — the
-      // lazy form's per-branch re-derivation (~3× CPU) starves them
       Orchestrator.run(specs,
-        instance(spark, dir, isSrc = true), instance(spark, dir, isSrc = false), SourceTag,
-        pinIdMaps = true)
+        instance(spark, dir, isSrc = true), instance(spark, dir, isSrc = false), SourceTag)
     })
     raw.map { case (t, mt) => t -> mt.copy(
       merged = graft.operators.Indexes.memo(s"m13run:${sr.token}:$dir:$t:merged")(mt.merged),

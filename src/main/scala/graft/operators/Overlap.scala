@@ -21,8 +21,13 @@ package graft.operators
   * cut/release operate on per-call frames, and each sub-pipeline's
   * result is deterministic regardless of scheduling. Results return
   * in INPUT order, so a caller's `reduce(_ unionAll _)` emits the
-  * same rows as the sequential loop it replaces. The first failure
-  * rethrows its original exception.
+  * same rows as the sequential loop it replaces.
+  *
+  * Failure: the first item to fail cancels every item that has not
+  * started, waits for the running ones to finish, and only then
+  * rethrows its original exception — so when `map` returns or throws,
+  * none of its items is still running (a failed merge cannot keep
+  * publishing behind its caller's back, or race the caller's retry).
   */
 object Overlap {
 
@@ -30,23 +35,28 @@ object Overlap {
     * (at most `maxThreads` in flight). Use when each `f` fires eager
     * Spark actions and no item depends on another's result. */
   def map[A, B](items: Seq[A], maxThreads: Int = 8)(f: A => B): Seq[B] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
     if (items.lengthCompare(2) < 0) items.map(f)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(items.size, maxThreads))
+      val pool = Executors.newFixedThreadPool(math.min(items.size, maxThreads))
       try {
-        val futs = items.map { a =>
-          pool.submit(new java.util.concurrent.Callable[B] {
-            def call(): B = f(a)
-          })
-        }
-        futs.map { fu =>
-          try fu.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
+        val done = new ExecutorCompletionService[B](pool)
+        val futs = items.map(a => done.submit(() => f(a)))
+        // in completion order, so the first failure is seen as it happens
+        for (_ <- futs.indices) {
+          try done.take().get()
+          catch { case e: ExecutionException =>
+            futs.foreach(_.cancel(false))
             throw e.getCause
           }
         }
-      } finally pool.shutdown()
+        futs.map(_.get())
+      } finally {
+        pool.shutdown()
+        // drain: a running item is never interrupted mid-action, and
+        // never left behind
+        while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+      }
     }
   }
 }

@@ -74,6 +74,12 @@ object State {
     }
   }
 
+  /** The cut for a frame of a few rows (a report): collects it once
+    * into a driver-side local relation. Nothing is left to recompute or
+    * to lose with an executor, and a later `collect` runs no job. */
+  def cutToDriver(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** Frees a PREVIOUS round generation's storage once the next one is
     * materialized. localCheckpoint state is cached RDD blocks that the
     * ContextCleaner frees only at GC time, so a long session running

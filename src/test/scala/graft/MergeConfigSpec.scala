@@ -469,4 +469,45 @@ class MergeConfigSpec extends AnyFunSuite {
     val dag = Seq(t("a"), t("b", fks = Map("a_id" -> "a")))
     assert(MergeConfig.breakDiscoveredCycles(dag, Set("a", "b")) == dag)
   }
+
+  test("a real run's report is cut before it returns: collecting it runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.testbus.Bus
+    val (srcDir, destDir, outDir) = writeInstances()
+    val cfg = MergeConfig.fromJson(configJson(srcDir, destDir, outDir, genUuids = false, persist = true))
+    val report = MergeConfig.execute(spark, cfg, dryRun = false)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    // the merge's own job events must not reach the listener
+    Bus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try {
+      val rs = report.collect()
+      Bus.drain(spark.sparkContext)
+      rs
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"collecting the report ran ${jobs.get()} Spark jobs")
+    assert(rows.map(r => r.getAs[String]("table_name") -> r.getAs[Long]("would_insert")).toMap ==
+      Map("parent" -> 1L, "child" -> 1L))
+  }
+
+  test("outputs publish concurrently, but the _merge_sources registry is still written last") {
+    import java.nio.file.{Files, Path, Paths}
+    val (srcDir, destDir, outDir) = writeInstances()
+    MergeConfig.execute(spark,
+      MergeConfig.fromJson(configJson(srcDir, destDir, outDir, genUuids = false, persist = true)),
+      dryRun = false)
+    def mtimes(dir: Path): Seq[java.time.Instant] = {
+      val files = Files.list(dir)
+      try files.toArray.toSeq.map(f => Files.getLastModifiedTime(f.asInstanceOf[Path]).toInstant)
+      finally files.close()
+    }
+    val outputs = Seq("parent", "parent__uuid_report", "parent__idmap", "child", "child__idmap")
+    val lastOutput = outputs.flatMap(n => mtimes(Paths.get(s"$outDir/$n.parquet"))).max
+    val registry = mtimes(Paths.get(s"$outDir/_merge_sources.parquet"))
+    assert(registry.nonEmpty && registry.min.compareTo(lastOutput) >= 0,
+      s"registry written at ${registry.min}, before an output written at $lastOutput")
+  }
 }

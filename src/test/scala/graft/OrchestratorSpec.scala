@@ -578,4 +578,77 @@ class OrchestratorSpec extends AnyFunSuite {
     // the plan must name real work: the merge inserted something
     assert(r.map(_.getAs[Long]("n_delete")).sum > 0L)
   }
+
+  /** Every keyed mode and relation class on one small DAG: a Consolidate
+    * parent, a Move child with an FK and a self FK, a Consolidate table
+    * matched through a mapped key, a SharedPk table and a keyless one. */
+  private def cutFixture() = {
+    val specs = Seq(
+      TableSpec("parent", "id", Seq("name"), MergeMode.Consolidate),
+      TableSpec("child", "id", Seq("label"), MergeMode.Move,
+        fks = Map("parent_id" -> "parent"), selfFks = Seq("prev_id")),
+      TableSpec("attr", "id", Seq("label"), MergeMode.Consolidate,
+        mappedKeys = Map("parent_id" -> "parent")),
+      TableSpec("profile", "id", Nil, MergeMode.SharedPk("child")),
+      TableSpec("tag", "", Seq("child_id", "tag"), MergeMode.Keyless,
+        fks = Map("child_id" -> "child")))
+    val src = Map(
+      "parent" -> Seq((1L, "alpha"), (2L, "beta")).toDF("id", "name"),
+      "child" -> Seq((100L, "x", 1L, Option.empty[Long]), (101L, "y", 2L, Some(100L)))
+        .toDF("id", "label", "parent_id", "prev_id"),
+      "attr" -> Seq((7L, "a", 1L), (8L, "a", 2L)).toDF("id", "label", "parent_id"),
+      "profile" -> Seq((100L, "p"), (101L, "q")).toDF("id", "bio"),
+      "tag" -> Seq((100L, "t"), (101L, "t")).toDF("child_id", "tag"))
+    val dst = Map(
+      "parent" -> Seq((10L, "alpha")).toDF("id", "name"),
+      "child" -> Seq((500L, "x", 10L, Option.empty[Long])).toDF("id", "label", "parent_id", "prev_id"),
+      "attr" -> Seq((70L, "a", 10L)).toDF("id", "label", "parent_id"),
+      "profile" -> Seq((500L, "o")).toDF("id", "bio"),
+      "tag" -> Seq((500L, "t")).toDF("child_id", "tag"))
+    (specs, src, dst)
+  }
+
+  test("run cuts every keyed id map: no id map plans a join, so no consumer re-derives one") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (specs, src, dst) = cutFixture()
+    val r = Orchestrator.run(specs, src, dst, "inst2")
+    for (spec <- specs if spec.mode != MergeMode.Keyless) {
+      val plan = r(spec.name).idMap.queryExecution.optimizedPlan
+      assert(plan.collect { case j: Join => j }.isEmpty, s"${spec.name}'s id map plans a join:\n$plan")
+      assert(plan.collect { case l: LogicalRDD => l }.nonEmpty, s"${spec.name}'s id map is not cut:\n$plan")
+    }
+    // the cut maps still drive a correct merge
+    val cmap = r("child").idMap.collect().map(x =>
+      (x.getAs[Long]("src_id"), x.getAs[Long]("dest_id"), x.getAs[Int]("is_new"))).toSet
+    assert(cmap == Set((100L, 500L, 0), (101L, 501L, 1)))
+    val y = r("child").merged.collect().find(_.getAs[String]("label") == "y").get
+    assert(y.getAs[Long]("parent_id") == 11L && y.getAs[Long]("prev_id") == 500L)
+  }
+
+  test("with spark.graft.checkpointDir set, run's id-map cuts are reliable checkpoints") {
+    import graft.operators.State
+    import org.apache.spark.sql.execution.LogicalRDD
+    val (specs, src, dst) = cutFixture()
+    val dir = java.nio.file.Files.createTempDirectory("graft-idmap-ckpt").toFile
+    spark.conf.set(State.CheckpointDirKey, dir.getAbsolutePath)
+    try {
+      val r = Orchestrator.run(specs, src, dst, "inst2")
+      for (spec <- specs if spec.mode != MergeMode.Keyless) {
+        val files = r(spec.name).idMap.queryExecution.optimizedPlan.collect {
+          case l: LogicalRDD => l.rdd.getCheckpointFile
+        }
+        assert(files.nonEmpty && files.forall(_.exists(_.startsWith(dir.toURI.toString.stripSuffix("/")))),
+          s"${spec.name}'s id map is not a checkpoint under $dir: $files")
+      }
+      assert(r("profile").idMap.collect().map(x => x.getAs[Long]("src_id") -> x.getAs[Long]("dest_id"))
+        .toMap == Map(100L -> 500L, 101L -> 501L))
+    } finally {
+      spark.conf.unset(State.CheckpointDirKey)
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).toSeq.flatten.foreach(rm); f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
 }

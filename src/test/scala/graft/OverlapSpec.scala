@@ -9,7 +9,8 @@ import graft.operators.{Indexes, Overlap}
   * therefore their oracle hashes — depends on it), a failing item
   * must rethrow its ORIGINAL exception, and concurrent same-key memo
   * callers must share one compute (the property that makes the
-  * overlapped s38 points collapse onto one adjacency build). */
+  * overlapped s38 points collapse onto one adjacency build). A failure
+  * must leave no item running once `map` has thrown. */
 class OverlapSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -29,6 +30,34 @@ class OverlapSpec extends AnyFunSuite {
       }
     }
     assert(boom.getMessage == "item 2 failed")
+  }
+
+  test("a failed map leaves nothing running: it waits for running items and starts no other") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val item2Started = new CountDownLatch(1)
+    val running = new AtomicInteger(0)
+    val finished, laterRan = new AtomicInteger(0)
+    val boom = intercept[IllegalStateException] {
+      Overlap.map(1 to 6, maxThreads = 2) { i =>
+        running.incrementAndGet()
+        try i match {
+          case 1 =>
+            item2Started.await(10, TimeUnit.SECONDS)
+            throw new IllegalStateException("item 1 failed")
+          case 2 =>
+            item2Started.countDown(); Thread.sleep(500); finished.incrementAndGet()
+          case _ =>
+            laterRan.incrementAndGet(); Thread.sleep(1000)
+        } finally { running.decrementAndGet(); () }
+      }
+    }
+    assert(boom.getMessage == "item 1 failed")
+    assert(running.get == 0, s"${running.get} items still running after map threw")
+    assert(finished.get == 1, "the running item was abandoned, not waited for")
+    // item 1's thread may take item 3 before the failure cancels it;
+    // items 4-6 are cancelled long before a thread frees up
+    assert(laterRan.get <= 1, s"${laterRan.get} items started after the failure")
   }
 
   test("single-item input runs on the caller thread (no pool)") {
