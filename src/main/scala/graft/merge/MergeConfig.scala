@@ -322,11 +322,17 @@ object MergeConfig {
     * `persist = true` each table's src→dest id map is also published
     * durably (`output/<table>__idmap`, preparation.js:53 — the
     * reference's beehive_merge_* map tables), the 100 TB answer to
-    * per-consumer map recomputation. Each id map is cut once, as the
-    * merge builds it, and the report is cut to the driver before the
-    * first publish. The outputs — merged tables, uuid reports, id maps
+    * per-consumer map recomputation.
+    *
+    * A run is two waves. Every src and dest reader opens once,
+    * concurrently, before the first action (the dry run's too). Then
+    * one read-only wave runs at once: the integrity gate, the skew
+    * audits and every id map ([[Orchestrator.idMaps]]: a DAG over map
+    * dependencies, one cut per map). Nothing is written before the gate
+    * passes, and a violation is reported even when an id map failed
+    * beside it. Then the outputs — merged tables, uuid reports, id maps
     * — are independent writes and publish concurrently (a `jdbc:`
-    * output one at a time).
+    * output one at a time), beside the report's cut to the driver.
     *
     * A `jdbc:` output writes every merged table INTO the live
     * database instead (the reference's actual shape — it inserts
@@ -427,21 +433,22 @@ object MergeConfig {
       if (cfg.source.path.startsWith("jdbc:")) discoverFks(cfg.source.path, cfg.tables)
       else cfg.tables
     val idColOf = tables.map(t => t.name -> t.idCol).toMap
-    // memoized per (transport, table): jdbcTableAuto issues an EAGER
-    // driver-side bounds query — the orchestrator, uuid-report and
-    // dry-run paths each re-read tables, and without the cache every
-    // call would hit the live database again for the same bounds. The
-    // skew audits open readers from Overlap threads, so the cache is
-    // locked: each reader, and each bounds query, is made once.
-    val readerCache = scala.collection.mutable.Map.empty[(String, String), DataFrame]
-    def reader(base: String)(name: String): DataFrame = readerCache.synchronized {
-      readerCache.getOrElseUpdate((base, name),
-        if (base.startsWith("jdbc:"))
+    // a mis-declared DAG fails before any reader opens
+    val order = Orchestrator.topoOrder(tables)
+    // every src and dest reader, opened once and concurrently before the
+    // first action: opening one is itself a job (parquet schema
+    // inference) or an EAGER driver-side bounds query (jdbcTableAuto),
+    // and the gate, the audits, the id maps, the uuid reports and the
+    // dry run all re-read the same tables
+    val readers = Overlap.map(for (base <- Seq(cfg.source.path, cfg.destination.path);
+                                   t <- tables) yield (base, t.name)) { case (base, name) =>
+      (base, name) ->
+        (if (base.startsWith("jdbc:"))
           graft.sources.Tables.jdbcTableAuto(spark, base, name, idColOf.get(name))
         else spark.read.parquet(s"$base/$name.parquet"))
-    }
-    val src = reader(cfg.source.path) _
-    val dest = reader(cfg.destination.path) _
+    }.toMap
+    val src = (name: String) => readers((cfg.source.path, name))
+    val dest = (name: String) => readers((cfg.destination.path, name))
     if (dryRun) Orchestrator.dryRun(tables, src, dest)
     else {
       import spark.implicits._
@@ -501,7 +508,7 @@ object MergeConfig {
           .map(_.as[String].collect().toSet).getOrElse(Set.empty)
       if (processed(cfg.source.location))
         throw new IllegalStateException(s"Location ${cfg.source.location} already processed")
-      // integrity gate BEFORE any mover — the reference's
+      // integrity gate BEFORE any write — the reference's
       // integrity-checks.js precedes every mover and hard-aborts;
       // without it the inner_or_null FK remap silently DROPS src rows
       // whose non-null FK dangles. Every declared relation class is
@@ -514,19 +521,24 @@ object MergeConfig {
           (s"${t.name}.$fk->$parent", src(t.name), fk, src(parent), idColOf(parent))
         }
       }
-      if (relations.nonEmpty) {
-        val orphans = MergeOps.orphanCheck(relations)
+      // the read-only wave: the gate, the skew audits that fill
+      // saltedFks (default-ON: only provably-hot relations salt;
+      // "autoSaltFks": false opts a table out) and every id map
+      // (Orchestrator.idMaps: one cut each) read only the instances, and
+      // run at once. Each item keeps its own outcome, so the gate's
+      // verdict is never lost to another item's failure.
+      val Seq(gate, audited, built) = Overlap.map(Seq[() => Any](
+        () => if (relations.isEmpty) Nil else MergeOps.orphanCheck(relations)
           .filter(col("orphan_count") > 0).collect()
-          .map(r => (r.getAs[String]("relation"), r.getAs[Long]("orphan_count")))
-        if (orphans.nonEmpty) throw MergePipeline.IntegrityViolation(orphans.toSeq)
-      }
-      // fill audit-driven salts BEFORE the movers plan their map joins
-      // (default-ON: every table runs the one-scan hotShare audit and
-      // only provably-hot relations salt; "autoSaltFks": false opts a
-      // table out entirely). Orchestrator.run cuts every keyed table's
-      // id map as it builds it.
-      val results = Orchestrator.run(
-        Orchestrator.autoSaltFks(tables, src), src, dest, cfg.source.location)
+          .map(r => (r.getAs[String]("relation"), r.getAs[Long]("orphan_count"))).toSeq,
+        () => Orchestrator.autoSaltFks(tables, src),
+        () => Orchestrator.idMaps(tables, src, dest)))(item => scala.util.Try(item()))
+      // the gate first: an orphaned FK must not hide behind a failed id
+      // map (a NULL id on a row to insert)
+      val orphans = gate.get.asInstanceOf[Seq[(String, Long)]]
+      if (orphans.nonEmpty) throw MergePipeline.IntegrityViolation(orphans)
+      val results = Orchestrator.run(audited.get.asInstanceOf[Seq[TableSpec]], src, dest,
+        cfg.source.location, built.get.asInstanceOf[Map[String, DataFrame]])
       val tMergeAll = System.nanoTime()
       // BUILD every output frame, and under sameStore cut it, before
       // the FIRST publish: merged tables and uuid reports lazily re-read
@@ -566,22 +578,23 @@ object MergeConfig {
       }
       // the report rows were counted from the decisions the run JUST
       // made, by the same counts function as the dry run — no second
-      // pass over src/dest (which under sameStore would read
-      // post-overwrite tables). Cut to the driver before the first
-      // publish: the caller's collect then runs no job.
-      val report = State.cutToDriver(Orchestrator.topoOrder(tables)
-        .map(t => results(t.name).report).reduce(_ unionAll _))
-      // every uuid report, merged table and id map is an independent
-      // write, so they publish concurrently. A JDBC output keeps one
-      // publish in flight: concurrent drop-and-recreate DDL on the
+      // pass over src/dest (under sameStore it is pinned above the
+      // first publish like every output, so it never reads
+      // post-overwrite tables). Its cut to the driver is one more item
+      // below: the caller's collect then runs no job.
+      val report = pin(Orchestrator.report(order.map(t => results(t.name).reportInput)))
+      // the report's cut and every uuid report, merged table and id map
+      // publish are independent, so they run concurrently. A JDBC output
+      // keeps one in flight: concurrent drop-and-recreate DDL on the
       // embedded engines is untested. A failed publish lets the running
       // ones finish and starts no other before it is rethrown.
-      Overlap.map(outputs.flatMap { case (spec, merged, uuidReport, idMap) =>
-        Seq[() => Unit](
-          () => uuidReport.foreach(publish(_, s"${spec.name}__uuid_report")),
-          () => publish(merged, spec.name),
-          () => idMap.foreach(publish(_, s"${spec.name}__idmap")))
-      }, maxThreads = if (jdbcOut) 1 else 8)(_())
+      val cutReport = Overlap.map((() => Some(State.cutToDriver(report))) +:
+        outputs.flatMap { case (spec, merged, uuidReport, idMap) =>
+          Seq[() => Option[DataFrame]](
+            () => { uuidReport.foreach(publish(_, s"${spec.name}__uuid_report")); None },
+            () => { publish(merged, spec.name); None },
+            () => { idMap.foreach(publish(_, s"${spec.name}__idmap")); None })
+        }, maxThreads = if (jdbcOut) 1 else 8)(_()).flatten.head
       logOk(f"${tables.size} tables from '${cfg.source.location}' merged in " +
         f"${(System.nanoTime() - tMergeAll) / 1e9}%.1f s")
       // record provenance LAST, after every publish above has finished
@@ -589,7 +602,7 @@ object MergeConfig {
       // repeatable (orchestrator.js:94)
       publish(
         (processed + cfg.source.location).toSeq.sorted.toDF("location"), registryName)
-      report
+      cutReport
     }
   }
 }

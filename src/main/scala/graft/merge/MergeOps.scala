@@ -43,8 +43,15 @@ object MergeOps {
     * the broadcast a rows-sized table. The numbering stays correct
     * either way (PropertySpec covers sparse keys); only the cost
     * changes.
+    *
+    * `cutBlocks = false` leaves the whole numbering lazy, for a caller
+    * that cuts the frame it builds from it anyway ([[Orchestrator.idMaps]]):
+    * the offsets branch and the numbering branch then each re-derive the
+    * block ranks inside that one cut, and agree because the blocks are
+    * deterministic.
     */
-  def assignSequentialIds(df: DataFrame, sortCol: String, idName: String, start: Long): DataFrame = {
+  def assignSequentialIds(df: DataFrame, sortCol: String, idName: String, start: Long,
+                          cutBlocks: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // r14-opt: the numbering is now one LAZY two-level prefix-rank
     // plan (the [[graft.operators.PrefixSum.blockCum]] convention)
@@ -77,18 +84,18 @@ object MergeOps {
       .otherwise(shiftright(col(sortCol).cast(LongType), blockShift))
     val withBlk = df.withColumn("__blk", blk)
     val wLocal = Window.partitionBy(col("__blk")).orderBy(col(sortCol))
-    // EAGER lineage cut (State.cut) of the block-ranked frame: the one
-    // real pass over the input. The offsets branch, the numbering join and every
-    // downstream plan reference of the id map then read these blocks
-    // instead of re-deriving the input per reference (the old
-    // zipWithIndex shape re-ran its hidden RDD lineage — including the
-    // source scans — once per reference AND once eagerly at
-    // construction; the scan-count gate in QueriesSpec pins the
-    // post-cut consumer plans). The session-scope analogue of the
-    // production contract in the scaladoc above: an id table is
-    // WRITTEN once and read by consumers, never re-derived.
-    val local = graft.operators.State.cut(withBlk
-      .withColumn("__rn", row_number().over(wLocal).cast(LongType)))
+    // With cutBlocks, an EAGER lineage cut (State.cut) of the block-
+    // ranked frame: the one real pass over the input. The offsets
+    // branch, the numbering join and every downstream plan reference
+    // of the id map then read these blocks instead of re-deriving the
+    // input per reference (the old zipWithIndex shape re-ran its hidden
+    // RDD lineage — including the source scans — once per reference
+    // AND once eagerly at construction; the scan-count gate in
+    // QueriesSpec pins the post-cut consumer plans). The session-scope
+    // analogue of the production contract in the scaladoc above: an id
+    // table is WRITTEN once and read by consumers, never re-derived.
+    val ranked = withBlk.withColumn("__rn", row_number().over(wLocal).cast(LongType))
+    val local = if (cutBlocks) graft.operators.State.cut(ranked) else ranked
     // exclusive per-block offsets: the only partition-less window,
     // over ≤#blocks aggregate rows (the PrefixSum.blockCum level-2
     // convention, whitelist-pinned in QueriesSpec)
@@ -132,11 +139,12 @@ object MergeOps {
   /** A decision's id map: the is_new = 0 rows as decided, the is_new =
     * 1 rows numbered contiguously past `start` in src-id order. The
     * filters prune the union's other legs at planning time, so the map
-    * scans and joins exactly what the decision does. */
-  def numberNew(decision: DataFrame, start: Long): DataFrame =
+    * scans and joins exactly what the decision does. `cutBlocks` is
+    * [[assignSequentialIds]]'. */
+  def numberNew(decision: DataFrame, start: Long, cutBlocks: Boolean = true): DataFrame =
     decision.filter(col("is_new") === 0).unionAll(
       assignSequentialIds(decision.filter(col("is_new") === 1).select(col("src_id")),
-          "src_id", "dest_id", start)
+          "src_id", "dest_id", start, cutBlocks)
         .select(col("src_id"), col("dest_id"), lit(1).as("is_new")))
 
   /** Metadata dedup-merge by natural key (reference utils.js:83

@@ -13,11 +13,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * order and threads driver-side JS maps between movers. Here the DAG
   * is DATA — a `Seq[TableSpec]` (the reference's config surface,
   * preparation.js:134: match columns, exclusions, per-table modes) —
-  * and the orchestrator topologically orders it and threads id maps as
-  * DataFrames. Nothing is collected: like beehive's maps, each id map
-  * is built once — cut ([[graft.operators.State.cut]]) as soon as it
-  * exists — and every consumer reads its materialized blocks; each
-  * table's merged frame is one declarative plan over them. Id-map join
+  * and the orchestrator threads id maps between tables as DataFrames.
+  * Nothing is collected: like beehive's maps, each id map is built once
+  * — cut ([[graft.operators.State.cut]]) as soon as it exists — and
+  * every consumer reads its materialized blocks; each table's merged
+  * frame is one declarative plan over them. The maps build as a DAG
+  * over map dependencies only (mappedKeys and SharedPk parents, see
+  * [[Orchestrator.idMaps]]), so independent maps build at once; the fk
+  * edges order only the merged frames. Id-map join
   * strategy is left to Spark's size-based auto-broadcast (metadata
   * maps broadcast, person-scale maps shuffle — never a forced hint
   * that would OOM the driver on a fact-sized map).
@@ -151,7 +154,11 @@ object Orchestrator {
     }
     /** Tables that must be merged before this one (deferredFks are
       * deliberately absent — they are what BREAKS cycles). */
-    def parents: Iterable[String] = fks.values ++ mappedKeys.values ++ (mode match {
+    def parents: Iterable[String] = fks.values ++ mapParents
+    /** Tables whose id maps this table's own id map is built from: its
+      * mappedKeys parents and its SharedPk parent. Its fks shape only
+      * the merged frame. */
+    def mapParents: Iterable[String] = mappedKeys.values ++ (mode match {
       case MergeMode.SharedPk(p) => Seq(p)
       case _                     => Nil
     })
@@ -162,9 +169,13 @@ object Orchestrator {
     * with idCol/fks/selfFks REWRITTEN IN PLACE, plus lineage columns
     * `src_<idCol>` (original id), `instance` ('src'/'dest') and
     * `merge_source` (which source instance a row came from —
-    * orchestrator.js:92 insertSource). `report` is the table's row of
-    * the merge report, counted as [[dryRun]] counts it. */
-  final case class MergedTable(merged: DataFrame, idMap: DataFrame, report: DataFrame)
+    * orchestrator.js:92 insertSource). `reportInput` is what the
+    * table's row of the merge report counts ([[report]]). */
+  final case class MergedTable(merged: DataFrame, idMap: DataFrame, reportInput: DataFrame) {
+    /** The table's row of the merge report, counted as [[dryRun]]
+      * counts it. */
+    def report: DataFrame = Orchestrator.report(Seq(reportInput))
+  }
 
   /** Kahn topological order over fk dependencies. Self-FKs are not
     * edges (they resolve against the table's own completed map).
@@ -252,7 +263,8 @@ object Orchestrator {
                       maps: String => DataFrame, start: => Long): DataFrame =
     spec.mode match {
       case MergeMode.SharedPk(_) => decide(s, d, spec, maps)
-      case _                     => MergeOps.numberNew(decide(s, d, spec, maps), start)
+      // uncut: idMaps cuts the whole map once
+      case _ => MergeOps.numberNew(decide(s, d, spec, maps), start, cutBlocks = false)
     }
 
   /** Schema-correct EMPTY id map (Keyless tables emit no map but
@@ -261,23 +273,37 @@ object Orchestrator {
     src.sparkSession.range(0).select(
       col("id").as("src_id"), col("id").as("dest_id"), lit(1).as("is_new"))
 
-  /** One table's report row — (table_name, mode, src_rows,
-    * already_in_dest, would_insert) — the one place the dry run and the
-    * real run count, in one aggregate pass. already_in_dest and
-    * would_insert count `decided`'s is_new = 0 and is_new = 1 rows (a
-    * keyed table's decision or id map, a keyless table's decided
-    * batch). src_rows counts `decided` too, or `rawSrc` when given: a
-    * keyless table reports its raw src rows, batch duplicates
-    * included. */
-  private def reportRow(spec: TableSpec, decided: DataFrame, rawSrc: Option[DataFrame]): DataFrame =
-    (rawSrc.map(_.select(lit(true).as("__src"), lit(null).cast(IntegerType).as("is_new"))).toSeq :+
+  /** What one table's report row counts: (table_name, mode, __src,
+    * is_new) rows. already_in_dest and would_insert count `decided`'s
+    * is_new = 0 and is_new = 1 rows (a keyed table's decision or id map,
+    * a keyless table's decided batch). src_rows counts `decided` too,
+    * or `rawSrc` when given: a keyless table reports its raw src rows,
+    * batch duplicates included. One row that counts nowhere keeps a
+    * table with no rows in the report. */
+  private def reportInput(spec: TableSpec, decided: DataFrame, rawSrc: Option[DataFrame]): DataFrame =
+    ((decided.sparkSession.range(1).select(lit(false).as("__src"),
+        lit(null).cast(IntegerType).as("is_new")) +:
+      rawSrc.map(_.select(lit(true).as("__src"), lit(null).cast(IntegerType).as("is_new"))).toSeq) :+
       decided.select(lit(rawSrc.isEmpty).as("__src"), col("is_new")))
       .reduce(_ unionAll _)
+      .select(lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
+        col("__src"), col("is_new"))
+
+  /** The merge report, one row per table in `inputs` order —
+    * (table_name, mode, src_rows, already_in_dest, would_insert) — the
+    * one place the dry run and the real run count: one aggregate pass
+    * over every table's [[MergedTable.reportInput]], so one shuffle
+    * for the whole report, not one per table. */
+  def report(inputs: Seq[DataFrame]): DataFrame =
+    inputs.zipWithIndex.map { case (df, i) => df.withColumn("__ord", lit(i)) }
+      .reduce(_ unionAll _)
+      .groupBy("__ord", "table_name", "mode")
       .agg(count(when(col("__src"), 1)).as("src_rows"),
         count(when(col("is_new") === 0, 1)).as("already_in_dest"),
         count(when(col("is_new") === 1, 1)).as("would_insert"))
-      .select(lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
-        col("src_rows"), col("already_in_dest"), col("would_insert"))
+      // a handful of rows: one partition, sorted in place, no exchange
+      .coalesce(1).sortWithinPartitions("__ord")
+      .select("table_name", "mode", "src_rows", "already_in_dest", "would_insert")
 
   /** Keyless association-table merge (MergeMode.Keyless): FK rewrite
     * through the parents' completed maps (inner_or_null — the strict
@@ -325,7 +351,7 @@ object Orchestrator {
       lit("dest").as("instance") :+ lit("dest").as("merge_source")): _*)
     // src_rows counts the RAW src table, batch duplicates included (the
     // gap INSERT IGNORE's affectedRows shows)
-    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), reportRow(spec, decided, Some(src)))
+    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), reportInput(spec, decided, Some(src)))
   }
 
   /** Fill `saltedFks` from each OPTED-IN spec's own fk histograms
@@ -354,19 +380,41 @@ object Orchestrator {
       if (auto.isEmpty) t else t.copy(saltedFks = t.saltedFks ++ auto)
     }
 
-  /** Run the full pipeline: topological order, id maps threaded
-    * parents→children, merged output per table.
-    *
-    * EAGER in its id maps: each keyed table's map is cut
-    * ([[graft.operators.State.cut]]) exactly once, as soon as it is
-    * built, so its children's FK remaps, its own movers and self-FK
-    * remap, the deferred FKs, the merged frame and the report all read
-    * the materialized blocks (the reference's `src_id → dest_id` map,
-    * built once in memory — utils.js:161). An uncut map would be
-    * re-derived by each consumer, its decision and numbering joins and
-    * all its ancestors' with it. A failure inside an id map (a NULL id
-    * on a row to insert) therefore throws here. The merged frames stay
-    * lazy.
+  /** Every keyed table's id map, built as one dependency wave
+    * ([[graft.operators.Overlap.dag]]) over map dependencies only: a
+    * map waits for its [[TableSpec.mapParents]] (mappedKeys and SharedPk
+    * parents), never for its fk parents, whose maps shape only the
+    * merged frame — so sibling tables, and most of an OpenMRS-shaped
+    * metadata layer, build at once. Each node reads its destination's
+    * max id and cuts its map ([[graft.operators.State.cut]]) exactly
+    * once: one eager action per map, and every consumer — children's FK
+    * remaps, its own movers and self-FK remap, the deferred FKs, the
+    * merged frame and the report — reads the materialized blocks (the
+    * reference's `src_id → dest_id` map, built once in memory —
+    * utils.js:161). A failure inside a map (a NULL id on a row to
+    * insert) throws here, after the wave's running maps have finished.
+    * `specs` must hold every keyed table's map parents; Keyless specs
+    * are skipped (they emit no map). */
+  def idMaps(specs: Seq[TableSpec], src: String => DataFrame,
+             dest: String => DataFrame): Map[String, DataFrame] = {
+    val keyed = specs.filter(_.mode != MergeMode.Keyless)
+    val byName = keyed.map(s => s.name -> s).toMap
+    graft.operators.Overlap.dag[String, DataFrame](keyed.map(_.name), byName(_).mapParents) {
+      (name, parents) =>
+        val spec = byName(name)
+        val d = dest(name)
+        // At 100 TB a fact-sized table's map should instead be WRITTEN
+        // once as a parquet id table (the reference's durable mapping)
+        // and read back.
+        graft.operators.State.cut(idMapOf(withMappedKeys(src(name), spec, parents), d, spec,
+          parents, maxId(d, spec.idCol)))
+    }
+  }
+
+  /** Run the full pipeline: [[idMaps]], then the merged output per
+    * table. The id maps are cut as they are built (see [[idMaps]]); the
+    * merged frames stay lazy. A mis-declared DAG fails before any map
+    * is built.
     *
     * @param src/dest   table name → instance DataFrame
     * @param sourceTag  provenance label recorded on every row moved
@@ -375,34 +423,26 @@ object Orchestrator {
   def run(specs: Seq[TableSpec],
           src: String => DataFrame, dest: String => DataFrame,
           sourceTag: String): Map[String, MergedTable] = {
-    val maps = scala.collection.mutable.Map.empty[String, DataFrame]
-    // r14-opt (guide §2.6): every Consolidate/Move table's dest
-    // max-id scalar depends ONLY on the raw destination table, yet
-    // inline it was one serial driver action per table on the id-map
-    // chain's critical path (the chain itself is dependency-true and
-    // cannot overlap). Prefetch them all concurrently up front; the
-    // values are identical by construction, so dry-run-equals-actual
-    // and every id map's rows are unchanged (OrchestratorSpec pins
-    // both).
+    topoOrder(specs)
+    run(specs, src, dest, sourceTag, idMaps(specs, src, dest))
+  }
+
+  /** [[run]] over id maps already built by [[idMaps]] for the same
+    * specs and instances: builds only the lazy merged frames and
+    * report rows. */
+  def run(specs: Seq[TableSpec],
+          src: String => DataFrame, dest: String => DataFrame,
+          sourceTag: String, maps: Map[String, DataFrame]): Map[String, MergedTable] = {
     val order = topoOrder(specs)
-    val knownMaxIds: Map[String, Long] = graft.operators.Overlap.map(
-      order.filter(s =>
-        s.mode == MergeMode.Consolidate || s.mode == MergeMode.Move)) { s =>
-      s.name -> maxId(dest(s.name), s.idCol)
-    }.toMap
     val firstPass = order.map { spec =>
       if (spec.mode == MergeMode.Keyless) {
         spec.name -> keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag)
       } else {
-      // mappedKeys rewritten once, used for BOTH matching and output —
-      // new rows must land in dest with dest-space key values
+      // mappedKeys rewritten as the id map's matching saw them — new
+      // rows must land in dest with dest-space key values
       val s = withMappedKeys(src(spec.name), spec, maps)
       val d = dest(spec.name)
-      // cut once (see above). At 100 TB a fact-sized table's map should
-      // instead be WRITTEN once as a parquet id table (the reference's
-      // durable mapping) and read back.
-      val idMap = graft.operators.State.cut(idMapOf(s, d, spec, maps, knownMaxIds(spec.name)))
-      maps(spec.name) = idMap
+      val idMap = maps(spec.name)
 
       // src rows that produce NEW dest rows; their id becomes dest_id
       val newIds = idMap.filter(col("is_new") === 1)
@@ -442,7 +482,7 @@ object Orchestrator {
           col(spec.idCol).cast(LongType).as(s"src_${spec.idCol}") :+
           lit("dest").as("instance") :+
           lit("dest").as("merge_source")).toIndexedSeq: _*)
-      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, reportRow(spec, idMap, None))
+      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, reportInput(spec, idMap, None))
       }
     }.toMap
 
@@ -489,13 +529,16 @@ object Orchestrator {
     * back; here each table makes the same single match decision
     * [[run]] numbers its id map from, and the same report row counts
     * it, so the dry run and the real run report the same numbers for
-    * every mode. The dry run allocates no ids: a real id map is built
-    * only where a child's matching reads destination ids — mappedKeys
-    * parents and Keyless tables' fk parents (the set-union key matches
-    * in dest id space), plus, transitively, a needed SharedPk table's
-    * parent. A SharedPk child takes its parent's decision. */
+    * every mode. The dry run allocates ids only where a child's
+    * matching reads destination ids — mappedKeys parents and Keyless
+    * tables' fk parents (the set-union key matches in dest id space),
+    * plus, transitively, a needed SharedPk table's parent. Those maps
+    * are built by [[idMaps]], one cut each, and their tables report
+    * from them; every other table's decision stays lazy. A SharedPk
+    * child takes its parent's decision. */
   def dryRun(specs: Seq[TableSpec],
              src: String => DataFrame, dest: String => DataFrame): DataFrame = {
+    val order = topoOrder(specs)
     val byName = specs.map(s => s.name -> s).toMap
     val mapNeeded = scala.collection.mutable.Set.empty[String]
     def needMap(n: String): Unit = if (mapNeeded.add(n)) byName(n).mode match {
@@ -506,19 +549,18 @@ object Orchestrator {
       s.mappedKeys.values.foreach(needMap)
       if (s.mode == MergeMode.Keyless) s.fks.values.foreach(needMap)
     }
-    val decisions = scala.collection.mutable.Map.empty[String, DataFrame]
-    val maps = scala.collection.mutable.Map.empty[String, DataFrame]
-    topoOrder(specs).map { spec =>
+    val maps = idMaps(specs.filter(s => mapNeeded(s.name)), src, dest)
+    // a map carries its decision's is_new, which is all a report counts
+    val decisions = scala.collection.mutable.Map[String, DataFrame](maps.toSeq: _*)
+    report(order.map { spec =>
       if (spec.mode == MergeMode.Keyless)
-        keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").report
+        keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").reportInput
       else {
-        val s = withMappedKeys(src(spec.name), spec, maps)
-        val d = dest(spec.name)
-        decisions(spec.name) = decide(s, d, spec, decisions)
-        if (mapNeeded(spec.name)) maps(spec.name) = idMapOf(s, d, spec, maps, maxId(d, spec.idCol))
-        reportRow(spec, decisions(spec.name), None)
+        decisions.getOrElseUpdate(spec.name,
+          decide(withMappedKeys(src(spec.name), spec, maps), dest(spec.name), spec, decisions))
+        reportInput(spec, decisions(spec.name), None)
       }
-    }.reduce(_ unionAll _)
+    })
   }
 
   private def modeLabel(mode: MergeMode): String = mode match {

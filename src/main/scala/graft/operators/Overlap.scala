@@ -59,4 +59,67 @@ object Overlap {
       }
     }
   }
+
+  /** A dependency wave: `f(node, parentResults)` for every node, each
+    * started on its own driver thread as soon as all of its `deps` have
+    * finished (at most `maxThreads` in flight), so independent branches
+    * overlap and a node never waits on a sibling. `parentResults` holds
+    * exactly the node's parents' results. Unknown parents and cycles
+    * are rejected before anything runs. Failure is [[map]]'s: the first
+    * failing node stops the wave — nodes not yet started never start,
+    * running ones are waited for — and its original exception is
+    * rethrown. Returns every node's result keyed by node. */
+  def dag[K, B](nodes: Seq[K], deps: K => Iterable[K], maxThreads: Int = 8)
+               (f: (K, Map[K, B]) => B): Map[K, B] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, Future, TimeUnit}
+    val parents = nodes.map(n => n -> deps(n).toSet).toMap
+    require(parents.size == nodes.size, s"duplicate nodes in $nodes")
+    parents.foreach { case (n, ps) =>
+      ps.foreach(p => require(parents.contains(p), s"node '$n' depends on unknown node '$p'"))
+    }
+    // Kahn: a cycle leaves nodes whose parents never all finish
+    var ready = Set.empty[K]
+    var rest = nodes
+    while (rest.nonEmpty) {
+      val (now, blocked) = rest.partition(parents(_).subsetOf(ready))
+      require(now.nonEmpty, s"cyclic dependencies among: ${blocked.mkString(", ")}")
+      ready ++= now
+      rest = blocked
+    }
+    val children = nodes.map(n => n -> nodes.filter(c => parents(c)(n))).toMap
+    if (nodes.lengthCompare(2) < 0) nodes.map(n => n -> f(n, Map.empty)).toMap
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(nodes.size, maxThreads))
+      val started = scala.collection.mutable.ArrayBuffer.empty[Future[(K, B)]]
+      try {
+        val done = new ExecutorCompletionService[(K, B)](pool)
+        var results = Map.empty[K, B]
+        val waiting = scala.collection.mutable.Map.from(parents.view.mapValues(_.size))
+        def submit(n: K): Unit = {
+          val mine = parents(n).map(p => p -> results(p)).toMap
+          started += done.submit(() => n -> f(n, mine))
+          ()
+        }
+        nodes.filter(waiting(_) == 0).foreach(submit)
+        // in completion order, so the first failure is seen as it happens
+        for (_ <- nodes.indices) {
+          val (n, b) =
+            try done.take().get()
+            catch { case e: ExecutionException =>
+              started.foreach(_.cancel(false))
+              throw e.getCause
+            }
+          results += n -> b
+          children(n).foreach { c =>
+            waiting(c) -= 1
+            if (waiting(c) == 0) submit(c)
+          }
+        }
+        results
+      } finally {
+        pool.shutdown()
+        while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
+      }
+    }
+  }
 }

@@ -316,6 +316,32 @@ class MergeConfigSpec extends AnyFunSuite {
     assert(!new java.io.File(outDir).exists())
   }
 
+  test("the gate keeps precedence: an orphaned FK is reported even when an id map fails beside it") {
+    val (srcDir, destDir, outDir) = writeInstances()
+    Seq((102L, 99L, "z")).toDF("id", "parent_id", "payload")
+      .write.mode("append").parquet(s"$srcDir/child.parquet")
+    // a parent row to insert with a NULL id fails parent's id map
+    Seq((Option.empty[Long], "delta", "u4")).toDF("id", "name", "uuid")
+      .write.mode("append").parquet(s"$srcDir/parent.parquet")
+    val cfg = MergeConfig.fromJson(configJson(srcDir, destDir, outDir, genUuids = false))
+    val ex = intercept[graft.merge.MergePipeline.IntegrityViolation] {
+      MergeConfig.execute(spark, cfg, dryRun = false)
+    }
+    assert(ex.getMessage.contains("child.parent_id->parent"))
+    assert(!new java.io.File(outDir).exists())
+    // with no violation beside it, the id map's own failure surfaces
+    val (src2, dest2, out2) = writeInstances()
+    Seq((Option.empty[Long], "delta", "u4")).toDF("id", "name", "uuid")
+      .write.mode("append").parquet(s"$src2/parent.parquet")
+    val e2 = intercept[Exception] {
+      MergeConfig.execute(spark, MergeConfig.fromJson(configJson(src2, dest2, out2, genUuids = false)),
+        dryRun = false)
+    }
+    assert(Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("NULL sort key")), e2)
+    assert(!new java.io.File(out2).exists())
+  }
+
   test("a published output dir is directly usable as the next merge's destination (sequential mode)") {
     val (srcDir, destDir, outDir) = writeInstances()
     MergeConfig.execute(spark,

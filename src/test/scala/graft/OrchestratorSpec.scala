@@ -626,6 +626,35 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(y.getAs[Long]("parent_id") == 11L && y.getAs[Long]("prev_id") == 500L)
   }
 
+  test("run cuts each keyed id map exactly once; the dry run cuts only the maps it needs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.testbus.Bus
+    val (specs, src, dst) = cutFixture()
+    // (result, persisted RDDs its jobs ran over): every State.cut
+    // persists the RDD it materializes. Counted from the stages as they
+    // are submitted, not from getPersistentRDDs, whose weak values lose
+    // a superseded cut as soon as it is garbage-collected.
+    def persisting[A](body: => A): (A, Int) = {
+      val sc = spark.sparkContext
+      val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => ids.add(r.id))
+      }
+      Bus.drain(sc)
+      sc.addSparkListener(listener)
+      val a = try { val a = body; Bus.drain(sc); a } finally sc.removeSparkListener(listener)
+      (a, ids.size)
+    }
+    val (r, runCuts) = persisting(Orchestrator.run(specs, src, dst, "inst2"))
+    assert(runCuts == specs.count(_.mode != MergeMode.Keyless), s"$runCuts cuts")
+    // parent (attr's mapped key) and child (tag's keyless fk)
+    val (dry, dryCuts) = persisting(Orchestrator.dryRun(specs, src, dst))
+    assert(dryCuts == 2, s"$dryCuts cuts")
+    val counts = dry.collect().map(x => x.getAs[String]("table_name") -> x.getAs[Long]("would_insert")).toMap
+    assert(counts == r.map { case (n, mt) => n -> mt.report.head().getAs[Long]("would_insert") })
+  }
+
   test("with spark.graft.checkpointDir set, run's id-map cuts are reliable checkpoints") {
     import graft.operators.State
     import org.apache.spark.sql.execution.LogicalRDD

@@ -10,7 +10,9 @@ import graft.operators.{Indexes, Overlap}
   * must rethrow its ORIGINAL exception, and concurrent same-key memo
   * callers must share one compute (the property that makes the
   * overlapped s38 points collapse onto one adjacency build). A failure
-  * must leave no item running once `map` has thrown. */
+  * must leave no item running once `map` has thrown. `dag` keeps the
+  * same failure contract and starts each node as soon as its parents
+  * are done (the merge's id maps build with it). */
 class OverlapSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -80,5 +82,84 @@ class OverlapSpec extends AnyFunSuite {
     assert(frames.forall(_.collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 2L, 3L))))
     // the per-key latch admits exactly one compute; waiters reuse it
     assert(computes.get() == 1, s"memo computed ${computes.get()} times under 6 concurrent callers")
+  }
+
+  test("dag returns every node's result keyed by node; a node sees exactly its parents' results") {
+    val deps = Map("a" -> Nil, "b" -> Seq("a"), "c" -> Seq("a", "b"), "d" -> Nil)
+    val out = Overlap.dag(Seq("c", "b", "a", "d"), deps) { (n, parents: Map[String, String]) =>
+      n + parents.toSeq.sorted.map { case (p, r) => s"[$p:$r]" }.mkString
+    }
+    assert(out == Map("a" -> "a", "b" -> "b[a:a]", "c" -> "c[a:a][b:b[a:a]]", "d" -> "d"))
+  }
+
+  test("dag starts a node only after all of its parents have finished") {
+    import java.util.concurrent.ConcurrentHashMap
+    val finished = ConcurrentHashMap.newKeySet[String]()
+    val early = ConcurrentHashMap.newKeySet[String]()
+    val deps = Map("slow" -> Nil, "fast" -> Nil, "child" -> Seq("slow", "fast"),
+      "grandchild" -> Seq("child"))
+    Overlap.dag(Seq("slow", "fast", "child", "grandchild"), deps) { (n, _: Map[String, Unit]) =>
+      if (!deps(n).forall(finished.contains)) early.add(n)
+      if (n == "slow") Thread.sleep(300)
+      finished.add(n); ()
+    }
+    assert(early.isEmpty, s"started before their parents finished: $early")
+    assert(finished.size == 4)
+  }
+
+  test("dag runs independent nodes at the same time") {
+    import java.util.concurrent.{CyclicBarrier, TimeUnit}
+    // each side waits for the other: run one after the other, the first
+    // one's await times out and the dag throws
+    val both = new CyclicBarrier(2)
+    val out = Overlap.dag(Seq("x", "y", "z"), Map("x" -> Nil, "y" -> Nil, "z" -> Seq("x", "y"))) {
+      (n, _: Map[String, Int]) =>
+        if (n != "z") both.await(10, TimeUnit.SECONDS)
+        1
+    }
+    assert(out.values.sum == 3)
+  }
+
+  test("dag rejects unknown parents and cycles before anything runs") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    def attempt(deps: Map[String, Seq[String]]): String = intercept[IllegalArgumentException] {
+      Overlap.dag(deps.keys.toSeq.sorted, deps) { (_, _: Map[String, Unit]) => ran.incrementAndGet(); () }
+    }.getMessage
+    assert(attempt(Map("a" -> Nil, "b" -> Seq("nope"))).contains("unknown node 'nope'"))
+    val cycle = attempt(Map("root" -> Nil, "a" -> Seq("root", "c"), "b" -> Seq("a"), "c" -> Seq("b")))
+    assert(cycle.contains("cyclic") && cycle.contains("a, b, c"), cycle)
+    assert(attempt(Map("self" -> Seq("self"))).contains("cyclic"))
+    assert(ran.get == 0, s"${ran.get} nodes ran for a rejected dag")
+  }
+
+  test("a failed dag starts no other node, waits for the running ones and rethrows the original") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val bStarted = new CountDownLatch(1)
+    val running, finished, queuedRan, childRan = new AtomicInteger(0)
+    // two threads: "fail" and "b" run, "queued" waits for a thread and
+    // "child" for b
+    val deps = Map("fail" -> Nil, "b" -> Nil, "queued" -> Nil, "child" -> Seq("b"))
+    val boom = intercept[IllegalStateException] {
+      Overlap.dag[String, Unit](Seq("fail", "b", "queued", "child"), deps, maxThreads = 2) {
+        (n, _) =>
+          running.incrementAndGet()
+          try n match {
+            case "fail" =>
+              bStarted.await(10, TimeUnit.SECONDS)
+              throw new IllegalStateException("node fail failed")
+            case "b" =>
+              bStarted.countDown(); Thread.sleep(500); finished.incrementAndGet()
+            case "queued" => queuedRan.incrementAndGet(); Thread.sleep(1000)
+            case _ => childRan.incrementAndGet()
+          } finally { running.decrementAndGet(); () }
+      }
+    }
+    assert(boom.getMessage == "node fail failed")
+    assert(running.get == 0, s"${running.get} nodes still running after dag threw")
+    assert(finished.get == 1, "the running node was abandoned, not waited for")
+    assert(childRan.get == 0, "a node started after its parent finished behind a failure")
+    // the failed node's thread may take "queued" before the cancel lands
+    assert(queuedRan.get <= 1)
   }
 }
