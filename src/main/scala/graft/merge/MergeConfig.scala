@@ -325,12 +325,15 @@ object MergeConfig {
     * per-consumer map recomputation.
     *
     * A run is two waves. Every src and dest reader opens once,
-    * concurrently, before the first action (the dry run's too). Then
-    * one read-only wave runs at once: the integrity gate, the skew
-    * audits and every id map ([[Orchestrator.idMaps]]: a DAG over map
-    * dependencies, one cut per map). Nothing is written before the gate
-    * passes, and a violation is reported even when an id map failed
-    * beside it. Then the outputs — merged tables, uuid reports, id maps
+    * concurrently, after the source-once guard and before the first
+    * action on the instances (the dry run's too). Then one read-only
+    * wave runs at once: the integrity gate, the skew audits and every
+    * id map ([[Orchestrator.idMaps]]: a DAG over map dependencies, one
+    * cut per map). Nothing is written before the gate passes, and a
+    * violation is reported even when an id map failed beside it. The
+    * gate does not stop the maps: a violation is thrown once the wave
+    * has finished, and the maps it cut are released first. Then the
+    * outputs — merged tables, uuid reports, id maps
     * — are independent writes and publish concurrently (a `jdbc:`
     * output one at a time), beside the report's cut to the driver.
     *
@@ -436,21 +439,24 @@ object MergeConfig {
     // a mis-declared DAG fails before any reader opens
     val order = Orchestrator.topoOrder(tables)
     // every src and dest reader, opened once and concurrently before the
-    // first action: opening one is itself a job (parquet schema
-    // inference) or an EAGER driver-side bounds query (jdbcTableAuto),
-    // and the gate, the audits, the id maps, the uuid reports and the
-    // dry run all re-read the same tables
-    val readers = Overlap.map(for (base <- Seq(cfg.source.path, cfg.destination.path);
-                                   t <- tables) yield (base, t.name)) { case (base, name) =>
-      (base, name) ->
-        (if (base.startsWith("jdbc:"))
-          graft.sources.Tables.jdbcTableAuto(spark, base, name, idColOf.get(name))
-        else spark.read.parquet(s"$base/$name.parquet"))
-    }.toMap
-    val src = (name: String) => readers((cfg.source.path, name))
-    val dest = (name: String) => readers((cfg.destination.path, name))
-    if (dryRun) Orchestrator.dryRun(tables, src, dest)
-    else {
+    // first action on the instances: opening one is itself a job
+    // (parquet schema inference) or an EAGER driver-side bounds query
+    // (jdbcTableAuto), and the gate, the audits, the id maps, the uuid
+    // reports and the dry run all re-read the same tables
+    def openReaders(): (String => DataFrame, String => DataFrame) = {
+      val readers = Overlap.map(for (base <- Seq(cfg.source.path, cfg.destination.path);
+                                     t <- tables) yield (base, t.name)) { case (base, name) =>
+        (base, name) ->
+          (if (base.startsWith("jdbc:"))
+            graft.sources.Tables.jdbcTableAuto(spark, base, name, idColOf.get(name))
+          else spark.read.parquet(s"$base/$name.parquet"))
+      }.toMap
+      (name => readers((cfg.source.path, name)), name => readers((cfg.destination.path, name)))
+    }
+    if (dryRun) {
+      val (src, dest) = openReaders()
+      Orchestrator.dryRun(tables, src, dest)
+    } else {
       import spark.implicits._
       import org.apache.spark.sql.functions.{col, when}
       val jdbcOut = cfg.output.startsWith("jdbc:")
@@ -508,6 +514,7 @@ object MergeConfig {
           .map(_.as[String].collect().toSet).getOrElse(Set.empty)
       if (processed(cfg.source.location))
         throw new IllegalStateException(s"Location ${cfg.source.location} already processed")
+      val (src, dest) = openReaders()
       // integrity gate BEFORE any write — the reference's
       // integrity-checks.js precedes every mover and hard-aborts;
       // without it the inner_or_null FK remap silently DROPS src rows
@@ -525,20 +532,23 @@ object MergeConfig {
       // saltedFks (default-ON: only provably-hot relations salt;
       // "autoSaltFks": false opts a table out) and every id map
       // (Orchestrator.idMaps: one cut each) read only the instances, and
-      // run at once. Each item keeps its own outcome, so the gate's
-      // verdict is never lost to another item's failure.
-      val Seq(gate, audited, built) = Overlap.map(Seq[() => Any](
-        () => if (relations.isEmpty) Nil else MergeOps.orphanCheck(relations)
+      // run at once. Each keeps its own outcome, so the gate's verdict
+      // is never lost to another item's failure.
+      val (gate, audited, built) = Overlap.settle(
+        if (relations.isEmpty) Nil else MergeOps.orphanCheck(relations)
           .filter(col("orphan_count") > 0).collect()
           .map(r => (r.getAs[String]("relation"), r.getAs[Long]("orphan_count"))).toSeq,
-        () => Orchestrator.autoSaltFks(tables, src),
-        () => Orchestrator.idMaps(tables, src, dest)))(item => scala.util.Try(item()))
+        Orchestrator.autoSaltFks(tables, src),
+        Orchestrator.idMaps(tables, src, dest))
       // the gate first: an orphaned FK must not hide behind a failed id
-      // map (a NULL id on a row to insert)
-      val orphans = gate.get.asInstanceOf[Seq[(String, Long)]]
-      if (orphans.nonEmpty) throw MergePipeline.IntegrityViolation(orphans)
-      val results = Orchestrator.run(audited.get.asInstanceOf[Seq[TableSpec]], src, dest,
-        cfg.source.location, built.get.asInstanceOf[Map[String, DataFrame]])
+      // map (a NULL id on a row to insert). The maps already built are
+      // released: nothing will read them.
+      val orphans = gate.get
+      if (orphans.nonEmpty) {
+        built.foreach(_.values.foreach(State.release))
+        throw MergePipeline.IntegrityViolation(orphans)
+      }
+      val results = Orchestrator.run(audited.get, src, dest, cfg.source.location, built.get)
       val tMergeAll = System.nanoTime()
       // BUILD every output frame, and under sameStore cut it, before
       // the FIRST publish: merged tables and uuid reports lazily re-read
@@ -582,7 +592,7 @@ object MergeConfig {
       // first publish like every output, so it never reads
       // post-overwrite tables). Its cut to the driver is one more item
       // below: the caller's collect then runs no job.
-      val report = pin(Orchestrator.report(order.map(t => results(t.name).reportInput)))
+      val report = pin(order.map(t => results(t.name).report).reduce(_ unionAll _))
       // the report's cut and every uuid report, merged table and id map
       // publish are independent, so they run concurrently. A JDBC output
       // keeps one in flight: concurrent drop-and-recreate DDL on the

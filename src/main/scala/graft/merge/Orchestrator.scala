@@ -169,13 +169,9 @@ object Orchestrator {
     * with idCol/fks/selfFks REWRITTEN IN PLACE, plus lineage columns
     * `src_<idCol>` (original id), `instance` ('src'/'dest') and
     * `merge_source` (which source instance a row came from —
-    * orchestrator.js:92 insertSource). `reportInput` is what the
-    * table's row of the merge report counts ([[report]]). */
-  final case class MergedTable(merged: DataFrame, idMap: DataFrame, reportInput: DataFrame) {
-    /** The table's row of the merge report, counted as [[dryRun]]
-      * counts it. */
-    def report: DataFrame = Orchestrator.report(Seq(reportInput))
-  }
+    * orchestrator.js:92 insertSource). `report` is the table's row of
+    * the merge report, counted as [[dryRun]] counts it. */
+  final case class MergedTable(merged: DataFrame, idMap: DataFrame, report: DataFrame)
 
   /** Kahn topological order over fk dependencies. Self-FKs are not
     * edges (they resolve against the table's own completed map).
@@ -273,37 +269,23 @@ object Orchestrator {
     src.sparkSession.range(0).select(
       col("id").as("src_id"), col("id").as("dest_id"), lit(1).as("is_new"))
 
-  /** What one table's report row counts: (table_name, mode, __src,
-    * is_new) rows. already_in_dest and would_insert count `decided`'s
-    * is_new = 0 and is_new = 1 rows (a keyed table's decision or id map,
-    * a keyless table's decided batch). src_rows counts `decided` too,
-    * or `rawSrc` when given: a keyless table reports its raw src rows,
-    * batch duplicates included. One row that counts nowhere keeps a
-    * table with no rows in the report. */
-  private def reportInput(spec: TableSpec, decided: DataFrame, rawSrc: Option[DataFrame]): DataFrame =
-    ((decided.sparkSession.range(1).select(lit(false).as("__src"),
-        lit(null).cast(IntegerType).as("is_new")) +:
-      rawSrc.map(_.select(lit(true).as("__src"), lit(null).cast(IntegerType).as("is_new"))).toSeq) :+
+  /** One table's report row — (table_name, mode, src_rows,
+    * already_in_dest, would_insert) — the one place the dry run and the
+    * real run count, in one aggregate pass. already_in_dest and
+    * would_insert count `decided`'s is_new = 0 and is_new = 1 rows (a
+    * keyed table's decision or id map, a keyless table's decided
+    * batch). src_rows counts `decided` too, or `rawSrc` when given: a
+    * keyless table reports its raw src rows, batch duplicates
+    * included. */
+  private def reportRow(spec: TableSpec, decided: DataFrame, rawSrc: Option[DataFrame]): DataFrame =
+    (rawSrc.map(_.select(lit(true).as("__src"), lit(null).cast(IntegerType).as("is_new"))).toSeq :+
       decided.select(lit(rawSrc.isEmpty).as("__src"), col("is_new")))
       .reduce(_ unionAll _)
-      .select(lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
-        col("__src"), col("is_new"))
-
-  /** The merge report, one row per table in `inputs` order —
-    * (table_name, mode, src_rows, already_in_dest, would_insert) — the
-    * one place the dry run and the real run count: one aggregate pass
-    * over every table's [[MergedTable.reportInput]], so one shuffle
-    * for the whole report, not one per table. */
-  def report(inputs: Seq[DataFrame]): DataFrame =
-    inputs.zipWithIndex.map { case (df, i) => df.withColumn("__ord", lit(i)) }
-      .reduce(_ unionAll _)
-      .groupBy("__ord", "table_name", "mode")
       .agg(count(when(col("__src"), 1)).as("src_rows"),
         count(when(col("is_new") === 0, 1)).as("already_in_dest"),
         count(when(col("is_new") === 1, 1)).as("would_insert"))
-      // a handful of rows: one partition, sorted in place, no exchange
-      .coalesce(1).sortWithinPartitions("__ord")
-      .select("table_name", "mode", "src_rows", "already_in_dest", "would_insert")
+      .select(lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
+        col("src_rows"), col("already_in_dest"), col("would_insert"))
 
   /** Keyless association-table merge (MergeMode.Keyless): FK rewrite
     * through the parents' completed maps (inner_or_null — the strict
@@ -351,7 +333,7 @@ object Orchestrator {
       lit("dest").as("instance") :+ lit("dest").as("merge_source")): _*)
     // src_rows counts the RAW src table, batch duplicates included (the
     // gap INSERT IGNORE's affectedRows shows)
-    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), reportInput(spec, decided, Some(src)))
+    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), reportRow(spec, decided, Some(src)))
   }
 
   /** Fill `saltedFks` from each OPTED-IN spec's own fk histograms
@@ -482,7 +464,7 @@ object Orchestrator {
           col(spec.idCol).cast(LongType).as(s"src_${spec.idCol}") :+
           lit("dest").as("instance") :+
           lit("dest").as("merge_source")).toIndexedSeq: _*)
-      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, reportInput(spec, idMap, None))
+      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, reportRow(spec, idMap, None))
       }
     }.toMap
 
@@ -552,15 +534,15 @@ object Orchestrator {
     val maps = idMaps(specs.filter(s => mapNeeded(s.name)), src, dest)
     // a map carries its decision's is_new, which is all a report counts
     val decisions = scala.collection.mutable.Map[String, DataFrame](maps.toSeq: _*)
-    report(order.map { spec =>
+    order.map { spec =>
       if (spec.mode == MergeMode.Keyless)
-        keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").reportInput
+        keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").report
       else {
         decisions.getOrElseUpdate(spec.name,
           decide(withMappedKeys(src(spec.name), spec, maps), dest(spec.name), spec, decisions))
-        reportInput(spec, decisions(spec.name), None)
+        reportRow(spec, decisions(spec.name), None)
       }
-    })
+    }.reduce(_ unionAll _)
   }
 
   private def modeLabel(mode: MergeMode): String = mode match {

@@ -30,47 +30,41 @@ package graft.operators
   * publishing behind its caller's back, or race the caller's retry).
   */
 object Overlap {
+  import scala.util.Try
 
   /** `items.map(f)` with each `f(item)` run on its own driver thread
     * (at most `maxThreads` in flight). Use when each `f` fires eager
-    * Spark actions and no item depends on another's result. */
+    * Spark actions and no item depends on another's result. A [[dag]]
+    * with no edges. */
   def map[A, B](items: Seq[A], maxThreads: Int = 8)(f: A => B): Seq[B] = {
-    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
-    if (items.lengthCompare(2) < 0) items.map(f)
-    else {
-      val pool = Executors.newFixedThreadPool(math.min(items.size, maxThreads))
-      try {
-        val done = new ExecutorCompletionService[B](pool)
-        val futs = items.map(a => done.submit(() => f(a)))
-        // in completion order, so the first failure is seen as it happens
-        for (_ <- futs.indices) {
-          try done.take().get()
-          catch { case e: ExecutionException =>
-            futs.foreach(_.cancel(false))
-            throw e.getCause
-          }
-        }
-        futs.map(_.get())
-      } finally {
-        pool.shutdown()
-        // drain: a running item is never interrupted mid-action, and
-        // never left behind
-        while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
-      }
-    }
+    val out = wave[Int, B](items.indices, _ => Nil, maxThreads)((i, _) => f(items(i)))
+    items.indices.map(out)
   }
 
   /** A dependency wave: `f(node, parentResults)` for every node, each
     * started on its own driver thread as soon as all of its `deps` have
-    * finished (at most `maxThreads` in flight), so independent branches
-    * overlap and a node never waits on a sibling. `parentResults` holds
-    * exactly the node's parents' results. Unknown parents and cycles
-    * are rejected before anything runs. Failure is [[map]]'s: the first
+    * finished (at most 8 in flight), so independent branches overlap
+    * and a node never waits on a sibling. `parentResults` holds exactly
+    * the node's parents' results. Unknown parents and cycles are
+    * rejected before anything runs. Failure is [[map]]'s: the first
     * failing node stops the wave — nodes not yet started never start,
     * running ones are waited for — and its original exception is
     * rethrown. Returns every node's result keyed by node. */
-  def dag[K, B](nodes: Seq[K], deps: K => Iterable[K], maxThreads: Int = 8)
-               (f: (K, Map[K, B]) => B): Map[K, B] = {
+  def dag[K, B](nodes: Seq[K], deps: K => Iterable[K])(f: (K, Map[K, B]) => B): Map[K, B] =
+    wave(nodes, deps, maxThreads = 8)(f)
+
+  /** `(Try(a), Try(b), Try(c))`, the three run at once: for a caller
+    * that must see every outcome before it picks which failure to
+    * report. A failure cancels nothing; the call returns once all
+    * three have finished. */
+  def settle[A, B, C](a: => A, b: => B, c: => C): (Try[A], Try[B], Try[C]) = {
+    var ta: Try[A] = null; var tb: Try[B] = null; var tc: Try[C] = null
+    map(Seq[() => Unit](() => ta = Try(a), () => tb = Try(b), () => tc = Try(c)))(_())
+    (ta, tb, tc)
+  }
+
+  private def wave[K, B](nodes: Seq[K], deps: K => Iterable[K], maxThreads: Int)
+                        (f: (K, Map[K, B]) => B): Map[K, B] = {
     import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, Future, TimeUnit}
     val parents = nodes.map(n => n -> deps(n).toSet).toMap
     require(parents.size == nodes.size, s"duplicate nodes in $nodes")
@@ -86,9 +80,10 @@ object Overlap {
       ready ++= now
       rest = blocked
     }
-    val children = nodes.map(n => n -> nodes.filter(c => parents(c)(n))).toMap
     if (nodes.lengthCompare(2) < 0) nodes.map(n => n -> f(n, Map.empty)).toMap
     else {
+      val children = parents.toSeq.flatMap { case (c, ps) => ps.map(_ -> c) }
+        .groupMap(_._1)(_._2).withDefaultValue(Nil)
       val pool = Executors.newFixedThreadPool(math.min(nodes.size, maxThreads))
       val started = scala.collection.mutable.ArrayBuffer.empty[Future[(K, B)]]
       try {
@@ -118,6 +113,8 @@ object Overlap {
         results
       } finally {
         pool.shutdown()
+        // drain: a running node is never interrupted mid-action, and
+        // never left behind
         while (!pool.awaitTermination(1, TimeUnit.MINUTES)) ()
       }
     }

@@ -308,12 +308,16 @@ class MergeConfigSpec extends AnyFunSuite {
     Seq((102L, 99L, "z")).toDF("id", "parent_id", "payload")
       .write.mode("append").parquet(s"$srcDir/child.parquet")
     val cfg = MergeConfig.fromJson(configJson(srcDir, destDir, outDir, genUuids = false))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[graft.merge.MergePipeline.IntegrityViolation] {
       MergeConfig.execute(spark, cfg, dryRun = false)
     }
     assert(ex.getMessage.contains("child.parent_id->parent"))
     // hard abort means NOTHING was published
     assert(!new java.io.File(outDir).exists())
+    // and the id maps cut beside the gate were released
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(left.isEmpty, s"persisted RDDs left behind: $left")
   }
 
   test("the gate keeps precedence: an orphaned FK is reported even when an id map fails beside it") {

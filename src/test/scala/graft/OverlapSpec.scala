@@ -135,31 +135,43 @@ class OverlapSpec extends AnyFunSuite {
   test("a failed dag starts no other node, waits for the running ones and rethrows the original") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicInteger
-    val bStarted = new CountDownLatch(1)
+    val othersStarted = new CountDownLatch(7)
     val running, finished, queuedRan, childRan = new AtomicInteger(0)
-    // two threads: "fail" and "b" run, "queued" waits for a thread and
-    // "child" for b
-    val deps = Map("fail" -> Nil, "b" -> Nil, "queued" -> Nil, "child" -> Seq("b"))
+    // ten nodes, eight threads: "fail", "b" and six fillers run,
+    // "queued" waits for a thread and "child" for b
+    val nodes = Seq("fail", "b") ++ (1 to 6).map(i => s"f$i") ++ Seq("queued", "child")
+    val deps = nodes.map(n => n -> (if (n == "child") Seq("b") else Nil)).toMap
     val boom = intercept[IllegalStateException] {
-      Overlap.dag[String, Unit](Seq("fail", "b", "queued", "child"), deps, maxThreads = 2) {
+      Overlap.dag[String, Unit](nodes, deps) {
         (n, _) =>
           running.incrementAndGet()
           try n match {
             case "fail" =>
-              bStarted.await(10, TimeUnit.SECONDS)
+              othersStarted.await(10, TimeUnit.SECONDS)
               throw new IllegalStateException("node fail failed")
-            case "b" =>
-              bStarted.countDown(); Thread.sleep(500); finished.incrementAndGet()
             case "queued" => queuedRan.incrementAndGet(); Thread.sleep(1000)
-            case _ => childRan.incrementAndGet()
+            case "child" => childRan.incrementAndGet()
+            case _ =>
+              othersStarted.countDown(); Thread.sleep(500); finished.incrementAndGet()
           } finally { running.decrementAndGet(); () }
       }
     }
     assert(boom.getMessage == "node fail failed")
     assert(running.get == 0, s"${running.get} nodes still running after dag threw")
-    assert(finished.get == 1, "the running node was abandoned, not waited for")
+    assert(finished.get == 7, "a running node was abandoned, not waited for")
     assert(childRan.get == 0, "a node started after its parent finished behind a failure")
     // the failed node's thread may take "queued" before the cancel lands
     assert(queuedRan.get <= 1)
+  }
+
+  test("settle runs its three thunks at once and returns every outcome; a failure cancels nothing") {
+    import java.util.concurrent.{CyclicBarrier, TimeUnit}
+    val all = new CyclicBarrier(3)
+    val (a, b, c) = Overlap.settle(
+      { all.await(10, TimeUnit.SECONDS); 1 },
+      { all.await(10, TimeUnit.SECONDS); throw new IllegalStateException("b failed") }: String,
+      { all.await(10, TimeUnit.SECONDS); Thread.sleep(300); "c" })
+    assert(a.get == 1 && c.get == "c")
+    assert(b.failed.get.getMessage == "b failed")
   }
 }
