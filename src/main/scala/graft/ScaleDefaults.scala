@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Executable form of SURVEY §5's cluster sizing rules — the configs a
-  * 100 TB deployment sets, derived from cluster shape instead of
-  * hardcoded. Local harnesses (Verify/Bench) keep the driver-contract
-  * configs; this is the deploy path.
+/** Executable form of SURVEY §5's cluster sizing rules, derived from
+  * cluster shape instead of hardcoded. Sessions themselves come from
+  * [[GraftSession]].
   */
 object ScaleDefaults {
 
@@ -20,20 +17,4 @@ object ScaleDefaults {
     val bySize = math.ceil(expectedShuffleGB * 1024.0 / targetPartitionMB).toInt
     math.max(byCores, bySize)
   }
-
-  /** Apply the scale configuration to a session builder. */
-  def configure(b: SparkSession.Builder, totalCores: Int,
-                expectedShuffleGB: Double): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions",
-        shufflePartitions(totalCores, expectedShuffleGB).toString)
-      // AQE: runtime coalesce, skew-join splitting, dynamic join planning
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // scans: 256 MB splits keep task count sane on 100 TB inputs
-      .config("spark.sql.files.maxPartitionBytes", (256L * 1024 * 1024).toString)
-      // dims up to 512 MB broadcast (the id maps of SURVEY §5)
-      .config("spark.sql.autoBroadcastJoinThreshold", (512L * 1024 * 1024).toString)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
 }

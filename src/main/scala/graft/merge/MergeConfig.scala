@@ -395,7 +395,7 @@ object MergeConfig {
       if (cfg.output.startsWith("jdbc:"))
         spark.read.format("jdbc").option("url", cfg.output)
           .option("dbtable", s"${name}__idmap").load()
-      else spark.read.parquet(s"${cfg.output}/${name}__idmap.parquet")
+      else graft.sources.Tables.parquet(spark, s"${cfg.output}/${name}__idmap.parquet")
     order.zipWithIndex.map { case (spec, i) =>
       if (spec.mode == MergeMode.Keyless)
         spark.range(1).select(
@@ -439,17 +439,18 @@ object MergeConfig {
     // a mis-declared DAG fails before any reader opens
     val order = Orchestrator.topoOrder(tables)
     // every src and dest reader, opened once and concurrently before the
-    // first action on the instances: opening one is itself a job
-    // (parquet schema inference) or an EAGER driver-side bounds query
-    // (jdbcTableAuto), and the gate, the audits, the id maps, the uuid
-    // reports and the dry run all re-read the same tables
+    // first action on the instances: opening one can itself be a job
+    // (parquet schema inference, on a file listing `Tables.parquet` has
+    // not seen) or an EAGER driver-side bounds query (jdbcTableAuto),
+    // and the gate, the audits, the id maps, the uuid reports and the
+    // dry run all re-read the same tables
     def openReaders(): (String => DataFrame, String => DataFrame) = {
       val readers = Overlap.map(for (base <- Seq(cfg.source.path, cfg.destination.path);
                                      t <- tables) yield (base, t.name)) { case (base, name) =>
         (base, name) ->
           (if (base.startsWith("jdbc:"))
             graft.sources.Tables.jdbcTableAuto(spark, base, name, idColOf.get(name))
-          else spark.read.parquet(s"$base/$name.parquet"))
+          else graft.sources.Tables.parquet(spark, s"$base/$name.parquet"))
       }.toMap
       (name => readers((cfg.source.path, name)), name => readers((cfg.destination.path, name)))
     }

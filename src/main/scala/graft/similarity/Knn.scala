@@ -4210,11 +4210,11 @@ object Knn {
                   k: Int = K, nprobe: Int = 2): DataFrame = {
     import spark.implicits._
     import graft.functions.VectorFunctions.quantizeE6
-    val cents = spark.read.parquet(s"$indexPath/centroids.parquet")
+    val cents = Tables.parquet(spark, s"$indexPath/centroids.parquet")
       .collect()
       .map(r => (r.getAs[Int]("cell"), r.getSeq[Long](r.fieldIndex("cent")).toArray))
       .sortBy(_._1).toSeq
-    val corpus = spark.read.parquet(s"$indexPath/postings.parquet")
+    val corpus = Tables.parquet(spark, s"$indexPath/postings.parquet")
       .select($"neighbor_id", $"c", $"cn", $"cell".cast("long").as("cell"))
     val cellDists = cents.map { case (c, arr) =>
       struct(
@@ -4271,16 +4271,16 @@ object Knn {
   def s30FromIndex(spark: SparkSession, dir: String, indexPath: String,
                    k: Int = K, nprobe: Int = 2): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$indexPath/centroids.parquet").collect()
+    val cents = Tables.parquet(spark, s"$indexPath/centroids.parquet").collect()
       .map(r => (r.getAs[Int]("cell"), r.getSeq[Long](r.fieldIndex("cent")).toArray))
       .sortBy(_._1).toSeq
-    val books = spark.read.parquet(s"$indexPath/codebooks.parquet").collect()
+    val books = Tables.parquet(spark, s"$indexPath/codebooks.parquet").collect()
       .map(r => (r.getAs[Int]("s"), r.getAs[Int]("code"),
         r.getSeq[Long](r.fieldIndex("cent")).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (s, rows) =>
         s -> rows.map(t => (t._2, t._3)).sortBy(_._1).toSeq }
-    val postings = spark.read.parquet(s"$indexPath/postings.parquet")
+    val postings = Tables.parquet(spark, s"$indexPath/postings.parquet")
       .select($"neighbor_id", $"s", $"code", $"cell".cast("long").as("cell"))
     ivfpqSearch(postings, ivfpqDtab(spark, dir, cents, books, nprobe), k)
   }
@@ -4345,7 +4345,7 @@ object Knn {
   /** The (degree, kc, iters) a [[saveWalkIndex]] layout was built
     * with. */
   def walkIndexMeta(spark: SparkSession, indexPath: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"$indexPath/meta.parquet").collect().head
+    val r = Tables.parquet(spark, s"$indexPath/meta.parquet").collect().head
     (r.getAs[Int]("degree"), r.getAs[Int]("kc"), r.getAs[Int]("iters"))
   }
 
@@ -4359,10 +4359,10 @@ object Knn {
                    k: Int = K, beam: Int = 4, rounds: Int = 3,
                    live: Column = lit(true)): DataFrame = {
     import spark.implicits._
-    val cents = spark.read.parquet(s"$indexPath/centroids.parquet").collect()
+    val cents = Tables.parquet(spark, s"$indexPath/centroids.parquet").collect()
       .map(r => (r.getAs[Int]("cell"), r.getSeq[Long](r.fieldIndex("cent")).toArray))
       .sortBy(_._1).toSeq
-    val adj = spark.read.parquet(s"$indexPath/adjacency.parquet")
+    val adj = Tables.parquet(spark, s"$indexPath/adjacency.parquet")
       .repartition(spark.sessionState.conf.numShufflePartitions, $"src_id")
     graphWalkParts(spark, dir, adj, cents, k, beam, rounds, live)._2
   }
@@ -4377,7 +4377,7 @@ object Knn {
                    k: Int = K, shortlist: Int = 25): DataFrame = {
     import spark.implicits._
     import graft.functions.VectorFunctions.{dotI64, sumSqI64}
-    val corpusBits = spark.read.parquet(s"$indexPath/bits.parquet")
+    val corpusBits = Tables.parquet(spark, s"$indexPath/bits.parquet")
       .select($"vec_id".as("neighbor_id"), $"blo", $"bhi")
     val q = quantized(spark, dir)
     val queries = q.filter($"vec_id" < 10)

@@ -37,8 +37,8 @@ object AtomicSnapshot {
     val (dst, prev, _) = paths(target)
     // the target's OWN filesystem, not the cluster default FS
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) Some(spark.read.parquet(dst.toString))
-    else if (fs.exists(prev)) Some(spark.read.parquet(prev.toString))
+    if (fs.exists(dst)) Some(Tables.parquet(spark, dst.toString))
+    else if (fs.exists(prev)) Some(Tables.parquet(spark, prev.toString))
     else None
   }
 

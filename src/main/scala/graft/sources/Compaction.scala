@@ -174,15 +174,6 @@ object Compaction {
     dataFiles(dst).size
   }
 
-  /** Plan + execute with default thresholds; returns (plan, nFiles). */
-  def compactDir(spark: SparkSession, dir: String,
-                 targetBytes: Long = 128L * 1024 * 1024,
-                 smallBytes: Long = 32L * 1024 * 1024): (Plan, Int) = {
-    val p = plan(spark, dir, targetBytes, smallBytes)
-    val n = compact(spark, dir, p)
-    (p, n)
-  }
-
   // ---------------------------------------------------------------
   // Partitioned (Hive `key=value` directory) layouts
   // ---------------------------------------------------------------
@@ -275,14 +266,5 @@ object Compaction {
           s"(first: ${failures.head._1}: ${failures.head._2.getMessage})",
         failures.head._2)
     results.collect { case (part, scala.util.Success(n)) => part -> n }.toMap
-  }
-
-  /** Plan + execute a partitioned (or flat) table with default
-    * thresholds; returns the plan and per-partition file counts. */
-  def compactTree(spark: SparkSession, dir: String,
-                  targetBytes: Long = 128L * 1024 * 1024,
-                  smallBytes: Long = 32L * 1024 * 1024): (PartitionedPlan, Map[String, Int]) = {
-    val p = planPartitioned(spark, dir, targetBytes, smallBytes)
-    (p, compactPartitioned(spark, dir, p))
   }
 }

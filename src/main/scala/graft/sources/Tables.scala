@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink layer.
   *
@@ -9,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * writes with batched INSERTs. Here every table is a columnar source:
   * parquet first (pushdown + pruning for free), with csv/json/jdbc
   * paths for parity. Readers return plain DataFrames so every operator
-  * stays declarative and Catalyst-optimizable.
+  * stays declarative and Catalyst-optimizable. Every parquet directory
+  * read goes through [[parquet]], which infers a directory's schema
+  * once per file listing.
   */
 object Tables {
 
@@ -19,7 +23,71 @@ object Tables {
 
   /** Read one star-schema table from an sf directory. */
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The SQLConf keys parquet schema inference reads: footer type
+    * mapping, schema merging and summary files, case sensitivity,
+    * corrupt-file skipping, and partition-value type inference. */
+  private val inferenceConfs: Seq[String] = {
+    import org.apache.spark.sql.internal.SQLConf._
+    Seq(PARQUET_SCHEMA_MERGING_ENABLED, PARQUET_SCHEMA_RESPECT_SUMMARIES,
+      PARQUET_BINARY_AS_STRING, PARQUET_INT96_AS_TIMESTAMP, LEGACY_PARQUET_NANOS_AS_LONG,
+      PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION,
+      PARQUET_IGNORE_VARIANT_ANNOTATION, PARQUET_FIELD_ID_READ_ENABLED, IGNORE_CORRUPT_FILES,
+      CASE_SENSITIVE, PARTITION_COLUMN_TYPE_INFERENCE, TIMESTAMP_TYPE,
+      SESSION_LOCAL_TIMEZONE).map(_.key)
+  }
+
+  /** An inferred schema and what it was inferred from. */
+  private final case class Inferred(files: Seq[(String, Long, Long)],
+                                    confs: Seq[Option[String]], schema: StructType)
+
+  /** One entry per qualified path: the last schema inferred there. */
+  private val inferred = new java.util.concurrent.ConcurrentHashMap[String, Inferred]()
+
+  /** The one parquet directory read. Spark infers a parquet schema
+    * with a job that reads a footer; this runs that job once per file
+    * listing. The path is listed on the driver (recursively: names,
+    * sizes, mtimes); when the listing and the inference confs above
+    * equal those of the path's last inference, the read takes that
+    * schema and runs no job. Otherwise it infers as `spark.read.parquet`
+    * does and keeps the result as the path's only entry. Spark still
+    * lists the files on every read, so a rewritten directory
+    * (`AtomicSnapshot.publish`, `Compaction.compact`) is never read
+    * with a stale file list or schema. A path that lists no file
+    * (missing, empty, or a glob) is never cached and fails or resolves
+    * exactly as `spark.read.parquet`. Safe to call from concurrent
+    * threads. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(p).toString
+    val files =
+      try {
+        val it = fs.listFiles(p, true)
+        val b = Vector.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val s = it.next()
+          b += ((s.getPath.toString, s.getLen, s.getModificationTime))
+        }
+        Some(b.result().sorted).filter(_.nonEmpty)
+      } catch { case _: java.io.FileNotFoundException => None }
+    val confs = inferenceConfs.map(spark.conf.getOption)
+    val known = for {
+      listed <- files
+      e <- Option(inferred.get(key)) if e.files == listed && e.confs == confs
+    } yield e.schema
+    known match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        files match {
+          case Some(listed) => inferred.put(key, Inferred(listed, confs, df.schema))
+          case None => inferred.remove(key)
+        }
+        df
+    }
+  }
 
   /** events with `ts` normalized to TimestampType, whatever parquet
     * annotation a given testdata generation used:

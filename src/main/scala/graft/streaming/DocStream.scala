@@ -371,7 +371,7 @@ object DocStream {
     * idempotently (delete-then-overwrite). */
   private def readHwm(spark: SparkSession, path: String, batchId: Long): Option[Long] = {
     val prev =
-      try spark.read.parquet(path)
+      try graft.sources.Tables.parquet(spark, path)
         // partition columns read back as INT when the values are small
         // — cast before the driver getLong
         .agg(max(when(col("ingest_batch") < batchId, col("hwm_us"))),
@@ -438,7 +438,7 @@ object DocStream {
       ($"id".as("doc_id") +: (0 until k).map(j => $"id".as(s"h$j")) :+
         $"id".as("ingest_batch")): _*)
     try {
-      val df = spark.read.parquet(path)
+      val df = graft.sources.Tables.parquet(spark, path)
       // a crash between the two landings can leave a decisions
       // partition without its index twin (or vice versa) — schema is
       // what matters; replay rewrites both

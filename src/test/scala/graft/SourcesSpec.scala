@@ -91,6 +91,150 @@ class SourcesSpec extends AnyFunSuite {
     assert(pruned.count() == df.filter(col("n_regionkey") === 1).count())
   }
 
+  /** `body`'s result and the number of Spark jobs it submitted. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.testbus.Bus
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    // earlier tests' job events must not reach the listener
+    Bus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      Bus.drain(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("Tables.read infers a directory's schema once: a second read of it submits no job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    Tables.read(spark, sf, "nation").write.parquet(s"$dir/nation.parquet")
+    val (cold, coldJobs) = jobsDuring(Tables.read(spark, dir, "nation"))
+    val (warm, warmJobs) = jobsDuring(Tables.read(spark, dir, "nation"))
+    assert(coldJobs >= 1, "the first read infers the schema with a job")
+    assert(warmJobs == 0, s"the second read of an unchanged directory ran $warmJobs jobs")
+    assert(warm.schema == cold.schema)
+    assert(sortedRows(warm) == sortedRows(cold))
+  }
+
+  test("Tables.parquet reads a directory rewritten by AtomicSnapshot.publish or Compaction.compact with its new schema") {
+    import graft.sources.{AtomicSnapshot, Compaction}
+    import org.apache.spark.sql.functions.{col, sum}
+    val base = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
+    val snap = s"$base/snap"
+    AtomicSnapshot.publish(spark.range(3).toDF("id"), snap)
+    assert(Tables.parquet(spark, snap).columns.toSeq == Seq("id"))
+    val wide = spark.range(5).select(col("id"), (col("id") * 10).as("extra"))
+    AtomicSnapshot.publish(wide, snap)
+    val snapBack = Tables.parquet(spark, snap)
+    assert(snapBack.columns.toSeq == Seq("id", "extra"))
+    assert(sortedRows(snapBack) == sortedRows(wide))
+
+    // narrow files, read once, then wider files appended: compaction
+    // merges every group's schema into one file
+    val dir = s"$base/compact"
+    spark.range(0, 40).repartition(4).write.parquet(dir)
+    assert(Tables.parquet(spark, dir).columns.toSeq == Seq("id"))
+    spark.range(40, 80).select(col("id"), (col("id") * 2).as("extra"))
+      .repartition(4).write.mode("append").parquet(dir)
+    val plan = Compaction.plan(spark, dir, 10L * 1024 * 1024, 5L * 1024 * 1024)
+    assert(Compaction.compact(spark, dir, plan) == 1)
+    val compacted = Tables.parquet(spark, dir)
+    assert(compacted.columns.toSeq == Seq("id", "extra"))
+    assert(compacted.count() == 80)
+    assert(compacted.agg(sum(col("extra"))).head.getLong(0) == (40L until 80L).map(_ * 2).sum)
+  }
+
+  test("Tables.parquet re-infers when a schema-inference conf changes") {
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val dir = java.nio.file.Files.createTempDirectory("graft-ntz").toString
+    // a naive (isAdjustedToUTC = false) timestamp written without the
+    // Spark schema footer, which a Spark writer adds and inference
+    // prefers over the conf
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val naive = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message naive { required int64 ts (TIMESTAMP(MICROS,false)); }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val out = HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"), conf)
+    val writer = ExampleParquetWriter.builder(out).withType(naive).withConf(conf).build()
+    try writer.write(new SimpleGroupFactory(naive).newGroup().append("ts", 1704164645000000L))
+    finally writer.close()
+    val before = spark.conf.get(key)
+    assert(Tables.parquet(spark, dir).schema("ts").dataType == TimestampType)
+    try {
+      spark.conf.set(key, "true")
+      assert(Tables.parquet(spark, dir).schema("ts").dataType == TimestampNTZType)
+    } finally spark.conf.set(key, before)
+    assert(Tables.parquet(spark, dir).schema("ts").dataType == TimestampType)
+  }
+
+  test("Tables.parquet fails on a missing or empty path exactly as spark.read.parquet does") {
+    import org.apache.spark.sql.AnalysisException
+    val base = java.nio.file.Files.createTempDirectory("graft-missing").toString
+    val empty = new java.io.File(s"$base/empty.parquet")
+    assert(empty.mkdir())
+    Seq(s"$base/missing.parquet", empty.toString).foreach { path =>
+      val plain = intercept[AnalysisException](spark.read.parquet(path))
+      // twice: a failed read leaves nothing behind to serve
+      (1 to 2).foreach { _ =>
+        val ours = intercept[AnalysisException](Tables.parquet(spark, path))
+        assert(ours.getCondition == plain.getCondition)
+        assert(ours.getMessage == plain.getMessage)
+      }
+    }
+  }
+
+  test("a warm read of a partitioned directory keeps its columns, partition type, rows and pruning") {
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft-warm-part").toString + "/nation"
+    Tables.writeParquet(Tables.read(spark, sf, "nation"), dir, partitionBy = Seq("n_regionkey"))
+    val inferred = spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
+    val (warm, jobs) = jobsDuring(Tables.parquet(spark, dir))
+    assert(jobs == 0, s"the warm read ran $jobs jobs")
+    assert(warm.schema == inferred.schema)
+    assert(warm.columns.last == "n_regionkey")
+    assert(warm.schema("n_regionkey").dataType == inferred.schema("n_regionkey").dataType)
+    assert(sortedRows(warm) == sortedRows(inferred))
+    val pruned = warm.filter(col("n_regionkey") === 1)
+    val scan = pruned.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*n_regionkey#\\d+ = 1".r.findFirstIn(scan).isDefined,
+      scan.linesIterator.take(6).mkString("\n"))
+    assert(sortedRows(pruned) == sortedRows(inferred.filter(col("n_regionkey") === 1)))
+  }
+
+  test("src/main reads parquet directories only inside Tables.parquet") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val read = """\.read\s*\.(parquet\(|format\(\s*"parquet"\s*\))""".r
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = files.flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      read.findAllMatchIn(text).map(m => (f.toString, text.take(m.start).count(_ == '\n') + 1))
+    }
+    val tablesFile = "src/main/scala/graft/sources/Tables.scala"
+    val lines = Files.readAllLines(Paths.get(tablesFile)).asScala.toSeq
+    val first = lines.indexWhere(_.contains("def parquet(spark: SparkSession")) + 1
+    val last = first + lines.drop(first).indexWhere(_ == "  }")
+    assert(first > 0 && last >= first, s"Tables.parquet not found in $tablesFile")
+    assert(hits.nonEmpty, "the primitive's own read was not found")
+    hits.foreach { case (f, line) =>
+      assert(f == tablesFile && line >= first && line <= last,
+        s"$f:$line reads parquet outside Tables.parquet (lines $first-$last)")
+    }
+  }
+
   test("compaction: FFD plan touches only small files; rewrite preserves rows and shrinks file count") {
     import org.apache.spark.sql.functions.col
     import graft.sources.Compaction
