@@ -4,14 +4,6 @@ import java.nio.file.{Files, Paths}
 
 object Bench {
 
-  /** The one artifact-phase worker pool (set only while the
-    * `_artifacts` phase runs): chains AND m13_run's inner
-    * materializations share it so total in-flight Spark jobs stay
-    * inside the single cores-derived budget (guide §2.6 — "2-3 jobs
-    * in flight is plenty", not one pool per call site). */
-  @volatile private[graft] var sharedArtifactPool:
-    java.util.concurrent.ExecutorService = null
-
   /** Compact JSON number: 3 decimals, trailing zeros (and a bare
     * trailing dot) stripped — "1.700" → "1.7", "0.000" → "0".
     * Locale.ROOT: a comma-decimal default locale (de_DE, tr_TR) would
@@ -59,6 +51,93 @@ object Bench {
     line(kept(keep), bySlowest.size - keep)
   }
 
+  /** One step of the `_artifacts` phase: it builds one cross-query
+    * memo, and starts once every step named in `after` has finished.
+    * `after` names exactly the steps whose memo `run` reads, so a step
+    * reports its own build, not its upstream's. */
+  private[graft] final case class Step(name: String, after: Seq[String],
+                                       run: (SparkSession, String) => Any)
+
+  /** The `_artifacts` steps. Steps that read a memo no step owns (the
+    * quantized embeddings under kmeans, pq_codebooks and walk_madj)
+    * are safe concurrently: `Indexes.memo` builds each key once behind
+    * its latch. Ready steps start in table order (`Overlap.dag`'s rule),
+    * so the families whose chains take longest come first. */
+  private[graft] val artifactSteps: Seq[Step] = {
+    import graft.dedup.Dedup
+    import graft.merge.OrchestratorQueries
+    import graft.similarity.Knn
+    Seq(
+      // the t20/t21 BPE merge table (sequential rounds on the driver)
+      Step("bpe_table", Nil, graft.text.TextAnalysis.bpeMergeTable(_, _, 5)),
+      // the merged tables and id maps m13 and m23 read: the run cuts
+      // every id map as it builds, then each table's frame is counted
+      Step("m13_run", Nil, OrchestratorQueries.sharedRun(_, _))) ++
+    OrchestratorQueries.specs.map(_.name).map { t =>
+      Step(s"m13_run/$t", Seq("m13_run"), (spark, dir) => {
+        val mt = OrchestratorQueries.sharedRun(spark, dir)(t)
+        mt.merged.count(); mt.idMap.count()
+      })
+    } ++ Seq(
+      // k-means coarse cells, then IVF-PQ's books over their residuals
+      Step("kmeans", Nil, Knn.lloydCentroids(_, _)),
+      Step("ivfpq_books", Seq("kmeans"), Knn.ivfpqBooks(_, _)),
+      // MinHash signatures → d2's pair set → d7's clusters and the LP
+      // labels g3 and g7 project
+      Step("sig_index", Nil, Dedup.sigIndex(_, _).count()),
+      Step("d2_pairs", Seq("sig_index"), Dedup.d2Pairs(_, _).count()),
+      Step("d7_clusters", Seq("d2_pairs"), Dedup.d7Clusters(_, _).count()),
+      Step("g3_labels", Seq("d2_pairs"), graft.queries.GraphQueries.g3Labels(_, _).count()),
+      // s39's old-half index with the batch attached, then s41's
+      // compacted index over its churn
+      Step("walk_madj", Nil, Knn.walkAttachAdjacency(_, _).count()),
+      Step("walk_cadj", Seq("walk_madj"), Knn.walkCompactAdjacency(_, _).count()),
+      // d9/d10's shingle sets; c1's curation frame (read by c1, c2 and
+      // c3) reads the same shingle occurrences in its t11 leg
+      Step("shingle_sets", Nil, Dedup.shingleSets(_, _).count()),
+      Step("c1_curation", Seq("shingle_sets"), graft.text.TextAnalysis.c1Curation(_, _).count()),
+      Step("pq_codebooks", Nil, Knn.pqCodebooks(_, _)),
+      // the degree-3 serving graph and s40's repair of it; s38's
+      // degree sweep slices the same ranked banding graph, and s42's
+      // 2-round degree-16 graph refines the 1-round one
+      Step("walk_adj", Nil, Knn.walkAdjacency(_, _).count()),
+      Step("walk_fadj", Seq("walk_adj"), Knn.walkDeleteAdjacency(_, _).count()),
+      Step("walk_adj8", Seq("walk_adj"), Knn.walkAdjacency(_, _, 8).count()),
+      Step("walk_adj16", Seq("walk_adj"), Knn.walkAdjacency(_, _, 16).count()),
+      Step("walk_adj16r2", Seq("walk_adj16"), Knn.walkAdjacency(_, _, 16, 2).count()),
+      // the decode+embed tower mm5/mm9 share; mm10 prices its decode
+      Step("mm_tower", Nil, graft.multimodal.Media.warmXmodalTower(_, _)),
+      // the exact-recall yardstick every ANN audit joins against
+      Step("s1_exact", Nil, Knn.s1Brute(_, _).count()),
+      // d5/d8's scored top pairs; g6's co-purchase edges
+      Step("d5_pairs", Nil, Dedup.d5EmbeddingNearDup(_, _).count()),
+      Step("g6_copairs", Nil, graft.queries.GraphQueries.g6CoPairs(_, _).count()))
+  }
+
+  /** Runs `steps` as one [[graft.operators.Overlap.dag]], timing each.
+    * A step that throws is logged and timed like the others, and the
+    * steps after it still run; the phase then reads -1. Returns the
+    * phase's seconds and each step's, in table order. */
+  private[graft] def runArtifacts(steps: Seq[Step], spark: SparkSession, dir: String)
+  : (Double, Seq[(String, Double)]) = {
+    val t0 = System.nanoTime()
+    @volatile var failed = false
+    val byName = steps.map(s => s.name -> s).toMap
+    val secs = graft.operators.Overlap.dag[String, Double](steps.map(_.name), byName(_).after) {
+      (name, _) =>
+        val s0 = System.nanoTime()
+        try byName(name).run(spark, dir) catch { case e: Throwable =>
+          System.err.println(s"[bench] _artifacts/$name FAILED: ${e.getMessage}")
+          failed = true
+        }
+        val sec = (System.nanoTime() - s0) / 1e9
+        System.err.println(f"[bench] _artifacts/$name%-20s $sec%8.2f s")
+        sec
+    }
+    val phase = (System.nanoTime() - t0) / 1e9
+    (if (failed) -1.0 else phase, steps.map(s => s.name -> secs(s.name)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -66,166 +145,11 @@ object Bench {
     // absorb JVM/codegen/scan warmup so per-query numbers are steady-state
     sources.Tables.read(spark, sfDir, "lineitem").count()
     SparkEntry.queries.get("q1_pricing_summary").foreach(_(spark, sfDir).count())
-    // materialize the CROSS-QUERY memoized artifacts (d2 sketch pairs,
-    // shingle-set index, d7 cluster assignment) in an explicitly timed
-    // "_artifacts" phase. Without this the alphabetically-first
-    // consumer (d10 in round 4: 44.6 s vs its own ~1 s of work)
-    // absorbs the whole shared pipeline and masks real per-query
-    // regressions; with it, every per-query number is that query's own
-    // marginal cost regardless of execution order. Each family is
-    // timed separately (the phase was 46% of BENCH_r05 and opaque —
-    // the breakdown lands in BENCH_FULL.json, keyed "_artifacts/…").
-    // The signature index is warmed BEFORE d2_pairs so each reports
-    // its own marginal cost (d2 banding/verify vs signature build) and
-    // so d14's re-banding sweep hits a live index even if an earlier
-    // consumer's swap generation was replaced.
-    // Dependency CHAINS, warmed CONCURRENTLY (4 driver threads →
-    // overlapping Spark jobs; local[8] has headroom because each of
-    // these small-stage pipelines underutilizes the cores alone).
-    // Within a chain steps are sequential (each feeds the next);
-    // chains that touch a shared memo (quantized, shingleRows) are
-    // safe because Indexes.memo computes once behind a per-key latch.
-    // Per-step numbers under concurrency are LATENCIES (cross-chain
-    // contention included), still comparable run-to-run.
-    // g3_labels and d7_clusters both consume the d2 pair graph but
-    // not each other — fork them after d2 lands instead of chaining
-    // (chain 1 was the local critical path with all four serial)
-    val d2Done = new java.util.concurrent.CountDownLatch(1)
-    // POOL INVARIANT (what keeps the shared pool deadlock-free): every
-    // chain runs on `sharedArtifactPool`, which has a worker for each
-    // chain plus headroom, and only m13_run blocks on futures submitted
-    // to that pool; its inner tasks block on nothing. Every other step
-    // finishes without waiting on pool work (g3_gate waits on chain 1's
-    // latch, and chain 1 always holds a worker). A new step must not
-    // submit-and-wait on the pool: with every worker blocked, its
-    // futures could never start.
-    val artifactChains: Seq[Seq[(String, () => Unit)]] = Seq(
-      Seq(
-        "sig_index"    -> (() => { graft.dedup.Dedup.sigIndex(spark, sfDir).count(); () }),
-        "d2_pairs"     -> (() => {
-          try graft.dedup.Dedup.d2Pairs(spark, sfDir).count()
-          finally d2Done.countDown(); () }),
-        "d7_clusters"  -> (() => { graft.dedup.Dedup.d7Clusters(spark, sfDir).count(); () })),
-      Seq(
-        // the converged LP label frame g3 AND g7 project; the gate
-        // (timed separately so g3's own cost stays comparable) waits
-        // for the pair graph so this fork never races chain 1 into
-        // computing the d2 memo without its warmed signature index
-        "g3_gate"      -> (() => { d2Done.await(); () }),
-        "g3_labels"    -> (() => { graft.queries.GraphQueries.g3Labels(spark, sfDir).count(); () })),
-      // the c1 curation frame (t1/t2/t22/t11 signal stack) is read by
-      // c1, c2 AND c3; its t11 leg rides the shingle family
-      Seq(
-        "shingle_sets" -> (() => { graft.dedup.Dedup.shingleSets(spark, sfDir).count(); () }),
-        "c1_curation"  -> (() => { graft.text.TextAnalysis.c1Curation(spark, sfDir).count(); () })),
-      // r13-opt: the old single kmeans→…→walk_cadj chain WAS the
-      // _artifacts critical path (its 10 steps summed to the phase's
-      // entire 40 s wall at local[8]) — split along the REAL
-      // dependency edges so independent index builds overlap (guide
-      // §2.6). Measured both ways at local[8]: a 10-chain full split
-      // REGRESSED the phase 40.3 → 49.2 s (every step's latency
-      // inflated 2-4× — more in-flight chains than cores just moves
-      // wall time into contention), so the split is BALANCED: ~8
-      // chains whose longest (~21 s m13_run) bounds the phase. Steps
-      // that share a memo (quantized, the s17 banding) stay safe
-      // behind Indexes.memo's per-key latch.
-      // k-means coarse training gates the IVF-PQ residual books; the
-      // d5/d8 scored top-pair frame rides the quantized memo after.
-      Seq(
-        "kmeans"       -> (() => { graft.similarity.Knn.lloydCentroids(spark, sfDir); () }),
-        "ivfpq_books"  -> (() => { graft.similarity.Knn.ivfpqBooks(spark, sfDir); () }),
-        "d5_pairs"     -> (() => { graft.dedup.Dedup.d5EmbeddingNearDup(spark, sfDir).count(); () })),
-      // PQ codebooks train per-subspace on the quantized memo only
-      // (no coarse centroids — a separate chain from kmeans); then
-      // the degree-3 serving graph and s40's tombstone-repaired
-      // consolidation of it
-      Seq(
-        // the exact-recall yardstick every ANN audit joins against
-        // (memoized in s1Brute, r13-opt) — warmed so each audit
-        // reports its own serving marginal
-        "s1_exact"     -> (() => { graft.similarity.Knn.s1Brute(spark, sfDir).count(); () }),
-        "pq_codebooks" -> (() => { graft.similarity.Knn.pqCodebooks(spark, sfDir); () }),
-        "walk_adj"     -> (() => { graft.similarity.Knn.walkAdjacency(spark, sfDir).count(); () }),
-        "walk_fadj"    -> (() => { graft.similarity.Knn.walkDeleteAdjacency(spark, sfDir).count(); () })),
-      // the maintenance lifecycle (the merged insert-attached index,
-      // then the compacted index s41 serves — its churn composes the
-      // attach), then the s38 sweep degrees over the shared (latched)
-      // banding artifact and s42's 2-round d16 graph (the refine
-      // generations are memoized per round, so the r2 build
-      // re-expands walk_adj16's round-1 edges instead of rebuilding)
-      Seq(
-        // the cross-modal decode+embed tower mm5/mm9 share (memoized
-        // in xmodalTowers, r13-opt) — the decode pass is the budget
-        // mm10 prices, warmed like every other index build
-        "mm_tower"     -> (() => { graft.multimodal.Media.warmXmodalTower(spark, sfDir) }),
-        "walk_madj"    -> (() => { graft.similarity.Knn.walkAttachAdjacency(spark, sfDir).count(); () }),
-        "walk_cadj"    -> (() => { graft.similarity.Knn.walkCompactAdjacency(spark, sfDir).count(); () }),
-        "walk_adj8"    -> (() => { graft.similarity.Knn.walkAdjacency(spark, sfDir, 8).count(); () }),
-        "walk_adj16"   -> (() => { graft.similarity.Knn.walkAdjacency(spark, sfDir, 16).count(); () }),
-        "walk_adj16r2" -> (() => { graft.similarity.Knn.walkAdjacency(spark, sfDir, 16, 2).count(); () })),
-      // the m13-family orchestrator run (merged tables + id maps)
-      // is shared by m13 and m23 — warm both frame families
-      Seq(
-        "m13_run"      -> (() => {
-          // per-table materializations are independent lineages (each
-          // re-derives its parents from raw plans, not through the
-          // sibling memos) — submit them concurrently. r14-opt: to the
-          // SHARED artifact pool, not a private one — the r13 private
-          // max(4,cpus/4) pool stacked ON TOP of the 8 chain threads
-          // and oversubscribed the driver's cold local[32] run (75→153 s
-          // phase). Total in-flight jobs now never exceed the one
-          // cores-derived budget. Safe: these callables run no nested
-          // pool-blocking work, so the single blocking submitter
-          // (this step) always drains once sibling chains finish.
-          val mts = graft.merge.OrchestratorQueries.sharedRun(spark, sfDir).values.toSeq
-          val p = Bench.sharedArtifactPool
-          mts.map { mt => p.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = { mt.merged.count(); mt.idMap.count(); () }
-            }) }.foreach(_.get())
-        })),
-      // the BPE merge table is the t20/t21 trainer artifact (driver
-      // memo — rounds sequential jobs; t20 read 11.9 s in the r6
-      // driver run because the cold training landed on it), and the
-      // g6 co-purchase edge list is the link-prediction index
-      Seq(
-        "bpe_table"    -> (() => { graft.text.TextAnalysis.bpeMergeTable(spark, sfDir, 5); () }),
-        "g6_copairs"   -> (() => { graft.queries.GraphQueries.g6CoPairs(spark, sfDir).count(); () })))
-    val ta0 = System.nanoTime()
-    @volatile var artifactsFailed = false
-    // ONE shared worker pool bounds TOTAL in-flight concurrency across
-    // all chains AND m13_run's inner materializations (r14-opt): the
-    // r13 shape (8 chain threads + a separate max(4,cpus/4) inner pool
-    // = up to 16 concurrent jobs at 32 cores) is what the driver's
-    // cold local[32] run thrashed on. Sizing, measured cold at 32
-    // cores this round: a FLAT cores/4 pool (8 workers) REGRESSED the
-    // phase 42.3 → 53.7 s — the 8 chain tasks occupied every worker
-    // and m13_run's queued inner materializations starved behind them
-    // (m13_run 29.6 → 40.1 s). So the budget keeps every chain
-    // runnable and bounds the EXTRA in-flight work to a cores-derived
-    // headroom: chains + max(2, cpus/8) (32 cores → 12 in flight,
-    // down from r13's 16; 8 cores → 10, the shape whose phase the
-    // driver's own c8 run already accepted). Deadlock freedom: the
-    // POOL INVARIANT at `artifactChains`.
-    val artifactWorkers = artifactChains.size + math.max(2, cpus.toInt / 8)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(artifactWorkers)
-    Bench.sharedArtifactPool = pool
-    val artifactTimes =
-      try artifactChains.map { chain =>
-        pool.submit(new java.util.concurrent.Callable[Seq[(String, Double)]] {
-          def call(): Seq[(String, Double)] = chain.map { case (step, run) =>
-            val t0 = System.nanoTime()
-            try run() catch { case e: Throwable =>
-              System.err.println(s"[bench] _artifacts/$step FAILED: ${e.getMessage}")
-              artifactsFailed = true
-            }
-            val sec = (System.nanoTime() - t0) / 1e9
-            System.err.println(f"[bench] _artifacts/$step%-20s $sec%8.2f s")
-            step -> sec
-          }
-        })
-      }.flatMap(_.get())
-      finally { pool.shutdown(); Bench.sharedArtifactPool = null }
-    val artifactsSec = (System.nanoTime() - ta0) / 1e9
+    // the "_artifacts" phase builds every cross-query memo once, timed
+    // per step, so each query below reports its own marginal cost
+    // (without it the alphabetically-first consumer absorbed a whole
+    // shared pipeline: d10 in round 4, 44.6 s against ~1 s of work)
+    val (artifactsSec, artifactTimes) = runArtifacts(artifactSteps, spark, sfDir)
     System.err.println(f"[bench] ${"_artifacts"}%-22s $artifactsSec%8.2f s")
     // optional comma-separated query-name filter (local iteration on a
     // handful of queries without the full 160-query sweep); the driver
@@ -269,7 +193,7 @@ object Bench {
         name -> (if (sec2 < 0) sec else math.min(sec, sec2))
       }
     }
-    val results = ("_artifacts" -> (if (artifactsFailed) -1.0 else artifactsSec)) +: perQuery
+    val results = ("_artifacts" -> artifactsSec) +: perQuery
     val total = results.map(_._2).filter(_ >= 0).sum
     // Full-precision record for the repo (BENCH_FULL.json, committed
     // per round); the stdout line is [[metricLine]]'s trimmed map.

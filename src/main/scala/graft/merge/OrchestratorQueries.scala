@@ -25,7 +25,7 @@ object OrchestratorQueries {
 
   private val SourceTag = "instanceB"
 
-  private def specs: Seq[TableSpec] = Seq(
+  private[graft] def specs: Seq[TableSpec] = Seq(
     TableSpec("customer", "c_custkey", Seq("c_name"), MergeMode.Consolidate,
       selfFks = Seq("referred_by")),
     TableSpec("orders", "o_orderkey", Seq("o_orderkey"), MergeMode.Move,

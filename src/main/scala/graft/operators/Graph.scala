@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * never change label, so at corpus scale the per-round joins touch
   * the (tiny) pair graph, not the whole corpus; singletons union back
   * in at the end with label = self. Round state is node-sized and
-  * eagerly lineage-cut once per round (`localCheckpoint(true)`, the
+  * eagerly lineage-cut once per round (`State.cut`, the
   * round-7 iterative-state lesson): each round references the
   * previous frame twice, so lazily persisted generations nest into a
   * 2^rounds plan tree that driver-side stringification walks — fatal
@@ -32,7 +32,7 @@ object Graph {
     * ONCE. Iterative operators reference their edge frame every round,
     * and each lazy reference re-derives the normalize/dedup SHUFFLE
     * from the pair artifact — measured 3–4× on g5's 4-round BFS
-    * (5.9 s → 1.3 s at sf0.1). localCheckpoint preserves the reported
+    * (5.9 s → 1.3 s at sf0.1). [[State.cut]] preserves the reported
     * hash partitioning, so per-round equi-joins on `a` reuse it. At
     * cluster scale this is the one-time "adjacency artifact"
     * materialization every BSP graph system performs before
@@ -44,8 +44,7 @@ object Graph {
     val p = pairs
       .select(least(col(ca), col(cb)).as("a"), greatest(col(ca), col(cb)).as("b"))
       .filter($"a" =!= $"b").dropDuplicates("a", "b")
-    p.unionAll(p.select($"b".as("a"), $"a".as("b")))
-      .repartition($"a").localCheckpoint(true)
+    State.cut(p.unionAll(p.select($"b".as("a"), $"a".as("b"))).repartition($"a"))
   }
 
   /** @param pairs    undirected edges, one row per pair; the first two
@@ -225,8 +224,7 @@ object Graph {
     val und = p.unionAll(p.select($"b".as("a"), $"a".as("b")))
     // THREE consumers (both withDeg joins, the final output join) —
     // node-sized, checkpointed once per the multi-consumer rule
-    val deg = und.groupBy($"a".as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = State.cut(und.groupBy($"a".as("id")).agg(count(lit(1)).as("deg")))
     val withDeg = p
       .join(deg.select($"id".as("a"), $"deg".as("da")), "a")
       .join(deg.select($"id".as("b"), $"deg".as("db")), "b")
@@ -237,12 +235,11 @@ object Graph {
     // shuffle and the two degree joins don't re-run per reference
     // (the g5 lesson); edge-sized, so the checkpoint is as cheap as
     // one pass over the pair artifact
-    val oriented = withDeg.select(
+    val oriented = State.cut(withDeg.select(
         when($"da" < $"db" || ($"da" === $"db" && $"a" < $"b"),
           struct($"a".as("u"), $"b".as("v"), $"db".as("dv")))
           .otherwise(struct($"b".as("u"), $"a".as("v"), $"da".as("dv"))).as("e"))
-      .select($"e.u".as("u"), $"e.v".as("v"), $"e.dv".as("dv"))
-      .localCheckpoint(true)
+      .select($"e.u".as("u"), $"e.v".as("v"), $"e.dv".as("dv")))
     val o2 = oriented.select($"u".as("u2"), $"v".as("w"), $"dv".as("dw"))
     val wedges = oriented.join(o2, $"u" === $"u2" &&
         ($"dv" < $"dw" || ($"dv" === $"dw" && $"v" < $"w")))
@@ -285,10 +282,9 @@ object Graph {
     // materialized once so the normalize/dedup shuffle doesn't re-run
     // per reference (the g5 lesson; ReuseExchange does not survive
     // AQE's per-branch re-planning)
-    val p = pairs
+    val p = State.cut(pairs
       .select(least(col(ca), col(cb)).as("a"), greatest(col(ca), col(cb)).as("b"))
-      .filter($"a" =!= $"b").dropDuplicates("a", "b")
-      .localCheckpoint(true)
+      .filter($"a" =!= $"b").dropDuplicates("a", "b"))
     val edges = p.unionAll(p.select($"b".as("a"), $"a".as("b")))
     val deg = edges.groupBy($"a".as("id")).agg(count(lit(1)).as("deg"))
     val Array(li, lc) = labels.columns.take(2)

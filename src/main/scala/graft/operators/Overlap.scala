@@ -44,9 +44,11 @@ object Overlap {
   /** A dependency wave: `f(node, parentResults)` for every node, each
     * started on its own driver thread as soon as all of its `deps` have
     * finished (at most 8 in flight), so independent branches overlap
-    * and a node never waits on a sibling. `parentResults` holds exactly
-    * the node's parents' results. Unknown parents and cycles are
-    * rejected before anything runs. Failure is [[map]]'s: the first
+    * and a node never waits on a sibling. When more nodes are ready than
+    * threads are free, the one earliest in `nodes` starts first, so a
+    * node whose parents just finished can go ahead of a later root.
+    * `parentResults` holds exactly the node's parents' results. Unknown
+    * parents and cycles are rejected before anything runs. Failure is [[map]]'s: the first
     * failing node stops the wave — nodes not yet started never start,
     * running ones are waited for — and its original exception is
     * rethrown. Returns every node's result keyed by node. */
@@ -84,18 +86,25 @@ object Overlap {
     else {
       val children = parents.toSeq.flatMap { case (c, ps) => ps.map(_ -> c) }
         .groupMap(_._1)(_._2).withDefaultValue(Nil)
-      val pool = Executors.newFixedThreadPool(math.min(nodes.size, maxThreads))
+      val threads = math.min(nodes.size, maxThreads)
+      val pool = Executors.newFixedThreadPool(threads)
       val started = scala.collection.mutable.ArrayBuffer.empty[Future[(K, B)]]
       try {
         val done = new ExecutorCompletionService[(K, B)](pool)
         var results = Map.empty[K, B]
         val waiting = scala.collection.mutable.Map.from(parents.view.mapValues(_.size))
-        def submit(n: K): Unit = {
+        // ready nodes by their position in `nodes`; one is submitted
+        // only when a thread is free, so the earliest ready one goes next
+        val position = nodes.zipWithIndex.toMap
+        val queued = scala.collection.mutable.TreeSet.from(nodes.indices.filter(i => waiting(nodes(i)) == 0))
+        def running = started.size - results.size
+        def fill(): Unit = while (running < threads && queued.nonEmpty) {
+          val n = nodes(queued.head)
+          queued -= queued.head
           val mine = parents(n).map(p => p -> results(p)).toMap
           started += done.submit(() => n -> f(n, mine))
-          ()
         }
-        nodes.filter(waiting(_) == 0).foreach(submit)
+        fill()
         // in completion order, so the first failure is seen as it happens
         for (_ <- nodes.indices) {
           val (n, b) =
@@ -107,8 +116,9 @@ object Overlap {
           results += n -> b
           children(n).foreach { c =>
             waiting(c) -= 1
-            if (waiting(c) == 0) submit(c)
+            if (waiting(c) == 0) queued += position(c)
           }
+          fill()
         }
         results
       } finally {

@@ -1638,13 +1638,12 @@ object Events {
     import spark.implicits._
     val halfUp = graft.functions.IntMath.halfUpDiv _
     val wt = Window.partitionBy($"week")
-    val shares = Tables.events(spark, dir)
+    val shares = graft.operators.State.cut(Tables.events(spark, dir)
       .groupBy(expr("unix_micros(ts) DIV 604800000000").as("week"), $"event_type")
       .agg(count(lit(1)).as("n"))
       .withColumn("total", sum($"n").over(wt))
       .select($"week", $"event_type", $"n",
-        halfUp($"n" * 1000000L, $"total").as("share_e6"))
-      .localCheckpoint(true)
+        halfUp($"n" * 1000000L, $"total").as("share_e6")))
     val prev = shares.select(($"week" + 1L).as("week"), $"event_type",
       $"share_e6".as("prev_share_e6"))
     val minF = shares.agg(min($"week").as("w0"))
@@ -1814,11 +1813,11 @@ object Events {
   def e26Hazard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val halfUp = graft.functions.IntMath.halfUpDiv _
-    val spans = Tables.events(spark, dir)
+    // 4 consumers (starts/ends/bounds) of a user-sized frame
+    val spans = graft.operators.State.cut(Tables.events(spark, dir)
       .groupBy($"user_id")
       .agg(min(expr("unix_micros(ts) DIV 604800000000")).as("wf"),
-        max(expr("unix_micros(ts) DIV 604800000000")).as("wl"))
-      .localCheckpoint(true) // 4 consumers (starts/ends/bounds) of a user-sized frame
+        max(expr("unix_micros(ts) DIV 604800000000")).as("wl")))
     val starts = spans.groupBy($"wf".as("week")).agg(count(lit(1)).as("n_start"))
     val ends = spans.groupBy($"wl".as("week")).agg(count(lit(1)).as("n_end"))
     val bounds = spans.agg(min($"wf").as("w0"), max($"wl").as("w1"))
@@ -2294,9 +2293,8 @@ object Events {
     // TWO consumers (purchase join's broadcast build, cohort sizes) —
     // materialized once or each re-derives its own events scan (the
     // multi-consumer lesson; would be 3 scans, past the gate's bound)
-    val cohorts = ev.groupBy($"user_id")
-      .agg(expr("min(day) DIV 7").as("cohort_week"))
-      .localCheckpoint(true)
+    val cohorts = graft.operators.State.cut(ev.groupBy($"user_id")
+      .agg(expr("min(day) DIV 7").as("cohort_week")))
     val cells = ev.filter($"event_type" === "purchase")
       .select($"user_id", expr("day DIV 7").as("wk"), $"value")
       .join(cohorts, Seq("user_id"))

@@ -1174,11 +1174,10 @@ object Tpch {
     // re-histogram AND the final join-back — materialized once
     // (price-domain-bounded, never fact-sized) or lazy lineage
     // re-runs the fact scan per consumer
-    val hist = Tables.read(spark, dir, "lineitem")
+    val hist = graft.operators.State.cut(Tables.read(spark, dir, "lineitem")
       .groupBy($"l_returnflag".as("flag"),
         round($"l_extendedprice" * 100).cast("long").as("cents"))
-      .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("cnt")))
     // shared exact disc-median kernel (IntMath.discMedianHist — one
     // rank formula for q32 AND t29)
     def discMedian(h: DataFrame, valCol: String): DataFrame =

@@ -2070,10 +2070,9 @@ object Knn {
     // passes and the entry join read 10 materialized rows, not 4+
     // re-derivations of the scan+argmin lineage
     val queries = graft.operators.Indexes.memo(s"walk_queries:$dir:$centsKey") {
-      e.filter($"vec_id" < 10)
+      graft.operators.State.cut(e.filter($"vec_id" < 10)
         .select($"vec_id".as("query_id"), $"embedding".as("q"), $"nrm".as("qn"),
-          element_at(array_sort(array(cellDists: _*)), 1).getField("cell").as("cell"))
-        .localCheckpoint(true)
+          element_at(array_sort(array(cellDists: _*)), 1).getField("cell").as("cell")))
     }
     val corpusCells = graft.operators.Indexes.memo(
         s"walk_cells:$dir:$centsKey:$liveKey") {
@@ -3555,9 +3554,8 @@ object Knn {
     import spark.implicits._
     val q = quantized(spark, dir)
     val cents = lloydCentroids(spark, dir, kc, iters)
-    val assigned = assignCells(spark, q, cents)
-      .select($"cluster", floor(sqrt($"dist".cast("double"))).cast("long").as("dist_e6"))
-      .localCheckpoint()
+    val assigned = graft.operators.State.cut(assignCells(spark, q, cents)
+      .select($"cluster", floor(sqrt($"dist".cast("double"))).cast("long").as("dist_e6")))
     val hist = assigned.groupBy($"dist_e6").agg(count(lit(1)).as("cnt"))
     val cum = Window.orderBy($"dist_e6").rowsBetween(Window.unboundedPreceding, 0)
     val tot = hist.agg(sum($"cnt").as("n"))
@@ -3875,10 +3873,9 @@ object Knn {
     // plan description (the round-6 explainString disease — observed
     // here as ~70 s/round of 2 GB plan-string truncation)
     val edges = graft.operators.Indexes.memo(s"s28_edges:$dir:$eps") {
-      graft.dedup.Dedup.scoredCandidatePairs(spark, dir)
+      graft.operators.State.cut(graft.dedup.Dedup.scoredCandidatePairs(spark, dir)
         .filter($"cos_sim" >= eps)
-        .select($"vec_id1".as("a"), $"vec_id2".as("b"))
-        .localCheckpoint(true)
+        .select($"vec_id1".as("a"), $"vec_id2".as("b")))
     }
     val sym = edges.unionAll(edges.select($"b".as("a"), $"a".as("b")))
     // node-sized, consumed by three branches (output spine, core-id

@@ -62,16 +62,15 @@ object Tables {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val key = fs.makeQualified(p).toString
+    // listStatus, not listFiles: on the local filesystem listFiles
+    // reads each file's permissions, and Hadoop forks `ls -ld` for that
+    def listed(dir: Path): Seq[(String, Long, Long)] = fs.listStatus(dir).toSeq.flatMap { s =>
+      if (s.isDirectory) listed(s.getPath)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    }
     val files =
-      try {
-        val it = fs.listFiles(p, true)
-        val b = Vector.newBuilder[(String, Long, Long)]
-        while (it.hasNext) {
-          val s = it.next()
-          b += ((s.getPath.toString, s.getLen, s.getModificationTime))
-        }
-        Some(b.result().sorted).filter(_.nonEmpty)
-      } catch { case _: java.io.FileNotFoundException => None }
+      try Some(listed(p).sorted).filter(_.nonEmpty)
+      catch { case _: java.io.FileNotFoundException => None }
     val confs = inferenceConfs.map(spark.conf.getOption)
     val known = for {
       listed <- files

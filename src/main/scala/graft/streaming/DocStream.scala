@@ -159,18 +159,16 @@ object DocStream {
         .withColumnRenamed("doc_id1", "doc_id")
       // every batch doc gets a verdict row — docs with <3 tokens
       // have no signature (nothing to match on) and keep
-      val report = batch.select($"doc_id").dropDuplicates("doc_id")
+      val report = graft.operators.State.cut(batch.select($"doc_id").dropDuplicates("doc_id")
         .join(matches, Seq("doc_id"), "left")
         .select($"doc_id",
           coalesce($"n_corpus_matches", lit(0L)).as("n_corpus_matches"),
           $"min_match_id", $"max_est",
           when(coalesce($"n_corpus_matches", lit(0L)) > 0, "drop")
-            .otherwise("keep").as("verdict"))
-        .localCheckpoint(true)
-      val keptSigs = sigs.join(
+            .otherwise("keep").as("verdict")))
+      val keptSigs = graft.operators.State.cut(sigs.join(
           report.filter($"verdict" === "keep").select($"doc_id"),
-          Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
+          Seq("doc_id"), "left_semi"))
       (report, keptSigs)
     } finally { sigs.unpersist(); () }
   }

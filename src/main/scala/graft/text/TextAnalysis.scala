@@ -2254,10 +2254,9 @@ object TextAnalysis {
     * histogram arithmetic, q25's convention with q32's chaining. */
   def t29LengthOutliers(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import spark.implicits._
-    val hist = Tables.read(spark, dir, "documents")
+    val hist = graft.operators.State.cut(Tables.read(spark, dir, "documents")
       .select($"source", size(split(trim($"text"), "\\s+")).cast("long").as("toks"))
-      .groupBy($"source", $"toks").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy($"source", $"toks").agg(count(lit(1)).as("cnt")))
     // shared exact disc-median kernel (IntMath.discMedianHist — one
     // rank formula for q32 AND t29)
     def discMed(h: DataFrame, valCol: String): DataFrame =

@@ -129,4 +129,21 @@ class StateSpec extends AnyFunSuite {
       rm(dir)
     }
   }
+
+  test("src/main cuts lineage with localCheckpoint only inside State") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex
+        .collect { case (l, i) if l.contains("localCheckpoint(") => (f.toString, i + 1) }
+    }
+    val stateFile = "src/main/scala/graft/operators/State.scala"
+    assert(hits.exists(_._1 == stateFile), "State.cut's own localCheckpoint was not found")
+    hits.foreach { case (f, line) =>
+      assert(f == stateFile, s"$f:$line cuts lineage outside State.cut")
+    }
+  }
 }
