@@ -43,17 +43,16 @@ object Overlap {
 
   /** A dependency wave: `f(node, parentResults)` for every node, each
     * started on its own driver thread as soon as all of its `deps` have
-    * finished (at most 8 in flight), so independent branches overlap
-    * and a node never waits on a sibling. When more nodes are ready than
-    * threads are free, the one earliest in `nodes` starts first, so a
-    * node whose parents just finished can go ahead of a later root.
-    * `parentResults` holds exactly the node's parents' results. Unknown
-    * parents and cycles are rejected before anything runs. Failure is [[map]]'s: the first
+    * finished (at most `maxThreads` in flight), so independent branches
+    * overlap and a node never waits on a sibling. `parentResults` holds
+    * exactly the node's parents' results. Unknown parents and cycles are
+    * rejected before anything runs. Failure is [[map]]'s: the first
     * failing node stops the wave — nodes not yet started never start,
     * running ones are waited for — and its original exception is
     * rethrown. Returns every node's result keyed by node. */
-  def dag[K, B](nodes: Seq[K], deps: K => Iterable[K])(f: (K, Map[K, B]) => B): Map[K, B] =
-    wave(nodes, deps, maxThreads = 8)(f)
+  def dag[K, B](nodes: Seq[K], deps: K => Iterable[K], maxThreads: Int = 8)
+               (f: (K, Map[K, B]) => B): Map[K, B] =
+    wave(nodes, deps, maxThreads)(f)
 
   /** `(Try(a), Try(b), Try(c))`, the three run at once: for a caller
     * that must see every outcome before it picks which failure to
@@ -86,25 +85,18 @@ object Overlap {
     else {
       val children = parents.toSeq.flatMap { case (c, ps) => ps.map(_ -> c) }
         .groupMap(_._1)(_._2).withDefaultValue(Nil)
-      val threads = math.min(nodes.size, maxThreads)
-      val pool = Executors.newFixedThreadPool(threads)
+      val pool = Executors.newFixedThreadPool(math.min(nodes.size, maxThreads))
       val started = scala.collection.mutable.ArrayBuffer.empty[Future[(K, B)]]
       try {
         val done = new ExecutorCompletionService[(K, B)](pool)
         var results = Map.empty[K, B]
         val waiting = scala.collection.mutable.Map.from(parents.view.mapValues(_.size))
-        // ready nodes by their position in `nodes`; one is submitted
-        // only when a thread is free, so the earliest ready one goes next
-        val position = nodes.zipWithIndex.toMap
-        val queued = scala.collection.mutable.TreeSet.from(nodes.indices.filter(i => waiting(nodes(i)) == 0))
-        def running = started.size - results.size
-        def fill(): Unit = while (running < threads && queued.nonEmpty) {
-          val n = nodes(queued.head)
-          queued -= queued.head
+        def submit(n: K): Unit = {
           val mine = parents(n).map(p => p -> results(p)).toMap
           started += done.submit(() => n -> f(n, mine))
+          ()
         }
-        fill()
+        nodes.filter(waiting(_) == 0).foreach(submit)
         // in completion order, so the first failure is seen as it happens
         for (_ <- nodes.indices) {
           val (n, b) =
@@ -116,9 +108,8 @@ object Overlap {
           results += n -> b
           children(n).foreach { c =>
             waiting(c) -= 1
-            if (waiting(c) == 0) queued += position(c)
+            if (waiting(c) == 0) submit(c)
           }
-          fill()
         }
         results
       } finally {

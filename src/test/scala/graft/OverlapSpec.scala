@@ -120,24 +120,6 @@ class OverlapSpec extends AnyFunSuite {
     assert(out.values.sum == 3)
   }
 
-  test("dag starts the ready node earliest in its node order when no thread is free") {
-    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-    // eight threads: "first" and seven busy nodes take them all, and
-    // "late" waits; when "first" ends, its child goes ahead of "late"
-    val order = new ConcurrentLinkedQueue[String]()
-    val release = new CountDownLatch(1)
-    val nodes = Seq("first", "child") ++ (1 to 7).map(i => s"busy$i") :+ "late"
-    Overlap.dag(nodes, (n: String) => if (n == "child") Seq("first") else Nil) {
-      (n, _: Map[String, Unit]) =>
-        order.add(n)
-        if (n == "child") release.countDown()
-        if (n.startsWith("busy")) release.await(10, TimeUnit.SECONDS)
-        ()
-    }
-    val started = order.toArray.toSeq
-    assert(started.indexOf("child") < started.indexOf("late"), s"start order: $started")
-  }
-
   test("dag rejects unknown parents and cycles before anything runs") {
     val ran = new java.util.concurrent.atomic.AtomicInteger(0)
     def attempt(deps: Map[String, Seq[String]]): String = intercept[IllegalArgumentException] {

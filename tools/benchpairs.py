@@ -2,13 +2,14 @@
 """Alternating parent/change pairs of the benchmark, with a verdict.
 
     python3 tools/benchpairs.py --parent DIR --change DIR --workload merge \\
-        [--pairs 10] [--seeds 9001,2,3,...] [--seconds S] [--out runs.jsonl]
+        [--pairs 10] [--seeds 9001,2,3,...] [--out runs.jsonl]
     python3 tools/benchpairs.py --report runs.jsonl
 
 Each pair runs `python3 perfbench/run.py --workload W --seed N --seconds S
 --trace 0` once in each checkout, from that checkout's root and with its
 own CARGO_TARGET_DIR (`<checkout>/.bench_build`), alternating which side
-runs first. Every run's result line is appended to --out as it lands, so
+runs first. S is the change's BENCHMARK.json `run_seconds`, so both sides
+run as long as the benchmark does. Every run's result line is appended to --out as it lands, so
 a cut session keeps what it measured, and --report summarises such a
 file again; a later run with the same --out adds pairs after the ones
 already there.
@@ -93,7 +94,6 @@ def main(argv=None):
     ap.add_argument("--workload")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", default="9001,2,3,4,5,6,7,8,10,11")
-    ap.add_argument("--seconds", type=float)
     ap.add_argument("--out")
     ap.add_argument("--report")
     a = ap.parse_args(argv)
@@ -108,7 +108,7 @@ def main(argv=None):
     if not (a.parent and a.change and a.workload):
         ap.error("--parent, --change and --workload are required unless --report is given")
     seeds = [int(s) for s in a.seeds.split(",")]
-    seconds = a.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     runs = []
     if a.out and os.path.exists(a.out):
         with open(a.out) as f:
