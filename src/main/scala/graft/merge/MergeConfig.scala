@@ -587,13 +587,13 @@ object MergeConfig {
         (spec, pin(merged), uuidReport,
           if (cfg.persist) Some(results(spec.name).idMap) else None)
       }
-      // the report rows were counted from the decisions the run JUST
-      // made, by the same counts function as the dry run — no second
-      // pass over src/dest (under sameStore it is pinned above the
-      // first publish like every output, so it never reads
-      // post-overwrite tables). Its cut to the driver is one more item
-      // below: the caller's collect then runs no job.
-      val report = pin(order.map(t => results(t.name).report).reduce(_ unionAll _))
+      // the report counts the decisions the run JUST made, by the same
+      // function as the dry run — no second pass over src/dest (under
+      // sameStore it is pinned above the first publish like every
+      // output, so it never reads post-overwrite tables). Its cut to the
+      // driver is one more item below: the caller's collect then runs no
+      // job.
+      val report = pin(Orchestrator.report(order.map(t => t -> results(t.name).counted)))
       // the report's cut and every uuid report, merged table and id map
       // publish are independent, so they run concurrently. A JDBC output
       // keeps one in flight: concurrent drop-and-recreate DDL on the

@@ -18,8 +18,9 @@ import org.apache.spark.sql.types.LongType
   *     two-level prefix rank (value blocks + block offsets, the
   *     PrefixSum convention): one shuffle, no single-partition window,
   *     no skew;
-  *   - dedup/match/exclusion rules are semi/anti-joins Catalyst can
-  *     push down and reorder.
+  *   - the match decision is one pass of src left-joined to per-key
+  *     destination aggregates; the integrity and uuid rules are
+  *     semi/anti-joins Catalyst can push down and reorder.
   */
 object MergeOps {
 
@@ -27,12 +28,23 @@ object MergeOps {
     * (reference utils.js:11 getNextAutoIncrementId + utils.js:161
     * moveAllTableRecords's `ORDER BY id` batching).
     *
-    * Global order comes from deterministic value blocks that tile the
-    * integral sort key's order; ids are block-local ranks plus
-    * exclusive per-block offsets. The sort key must be integral and
-    * unique for the numbering to be deterministic, and non-null: a
-    * NULL key fails the job (raise_error in the block-key projection)
-    * instead of silently losing its row to the offsets join.
+    * One lazy two-level prefix rank (the
+    * [[graft.operators.PrefixSum.blockCum]] convention): arithmetic-shift
+    * value blocks tile the integral sort key's order, and id = start +
+    * exclusive block offset + rank within block. One hash shuffle on the
+    * block key, a #blocks-sized offsets window, a broadcast join — no
+    * sampling pass, no eager job.
+    *
+    * DETERMINISM: the blocks are arithmetic, not sampled, so the offsets
+    * branch and the numbering branch agree however often either
+    * re-derives the input. That is why the numbering can stay lazy: a
+    * caller that wants the ids read once cuts the frame it builds from
+    * them ([[consolidate]], [[Orchestrator.idMaps]]). The sort key must
+    * be integral and unique for the numbering to be deterministic, and
+    * non-null: a NULL key fails the job (raise_error in the block-key
+    * projection) instead of silently losing its row to the offsets join.
+    * Each block holds at most 2^22 rows, so no window partition exceeds
+    * ~4.2M rows whatever the data size.
     *
     * KEY DENSITY: the cost assumes dense keys. The partition-less
     * offsets window and `broadcast(offs)` are sized by the number of
@@ -43,59 +55,16 @@ object MergeOps {
     * the broadcast a rows-sized table. The numbering stays correct
     * either way (PropertySpec covers sparse keys); only the cost
     * changes.
-    *
-    * `cutBlocks = false` leaves the whole numbering lazy, for a caller
-    * that cuts the frame it builds from it anyway ([[Orchestrator.idMaps]]):
-    * the offsets branch and the numbering branch then each re-derive the
-    * block ranks inside that one cut, and agree because the blocks are
-    * deterministic.
     */
-  def assignSequentialIds(df: DataFrame, sortCol: String, idName: String, start: Long,
-                          cutBlocks: Boolean = true): DataFrame = {
+  def assignSequentialIds(df: DataFrame, sortCol: String, idName: String, start: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // r14-opt: the numbering is now one LAZY two-level prefix-rank
-    // plan (the [[graft.operators.PrefixSum.blockCum]] convention)
-    // instead of range-sort + `rdd.zipWithIndex`. The old shape paid
-    // three passes — the range partitioner's SAMPLING scan, the
-    // ZippedWithIndexRDD's EAGER per-partition count job fired at plan
-    // CONSTRUCTION time (2× the orchestrator's serial critical path,
-    // since the later materialization re-ran the sort), and the RDD
-    // round-trip dropped out of codegen. It was also only correct
-    // because both passes shared ONE RDD object: range bounds come
-    // from seeded sampling, so any re-execution of the exchange may
-    // split differently (measured: a two-branch Catalyst formulation
-    // over repartitionByRange produced GAPS AND DUPLICATE ids when the
-    // branches' exchanges weren't reused — m7's oracle caught it).
-    //
-    // Here the partition of the value axis is DETERMINISTIC (arithmetic
-    // shift blocks, which tile the sort order for both signs), so the
-    // local-rank branch and the block-offset branch agree no matter how
-    // many times either executes: id = start + exclusive block offset +
-    // rank within block. One hash shuffle on the block key, a
-    // #blocks-sized offsets window, a broadcast join — no sampling
-    // pass, no eager job, whole-stage codegen throughout. Each block
-    // holds ≤ 2^blockShift rows (the sort key is integral and UNIQUE by
-    // contract — same contract as before: ties would make any
-    // numbering nondeterministic), so no window partition ever exceeds
-    // ~4.2M rows regardless of data size.
     val blockShift = 22
     val blk = when(col(sortCol).isNull,
         raise_error(lit(s"assignSequentialIds: NULL sort key in column '$sortCol'")))
       .otherwise(shiftright(col(sortCol).cast(LongType), blockShift))
-    val withBlk = df.withColumn("__blk", blk)
-    val wLocal = Window.partitionBy(col("__blk")).orderBy(col(sortCol))
-    // With cutBlocks, an EAGER lineage cut (State.cut) of the block-
-    // ranked frame: the one real pass over the input. The offsets
-    // branch, the numbering join and every downstream plan reference
-    // of the id map then read these blocks instead of re-deriving the
-    // input per reference (the old zipWithIndex shape re-ran its hidden
-    // RDD lineage — including the source scans — once per reference
-    // AND once eagerly at construction; the scan-count gate in
-    // QueriesSpec pins the post-cut consumer plans). The session-scope
-    // analogue of the production contract in the scaladoc above: an id
-    // table is WRITTEN once and read by consumers, never re-derived.
-    val ranked = withBlk.withColumn("__rn", row_number().over(wLocal).cast(LongType))
-    val local = if (cutBlocks) graft.operators.State.cut(ranked) else ranked
+    val local = df.withColumn("__blk", blk)
+      .withColumn("__rn", row_number().over(Window.partitionBy(col("__blk")).orderBy(col(sortCol)))
+        .cast(LongType))
     // exclusive per-block offsets: the only partition-less window,
     // over ≤#blocks aggregate rows (the PrefixSum.blockCum level-2
     // convention, whitelist-pinned in QueriesSpec)
@@ -110,41 +79,43 @@ object MergeOps {
   }
 
   /** The match decision of one table — the single matcher behind
-    * consolidate (reference utils.js:83) and move (utils.js:161): one
-    * row (src_id, dest_id, is_new) per src row. A row whose `key`
-    * exists in the destination maps to the (minimum) dest id with that
-    * key, is_new = 0. With `uuidCol`, a row left unmatched on the key
-    * matches on the uuid instead. Every other row is new: is_new = 1
-    * and dest_id null until [[numberNew]] numbers it. Each leg is an
-    * equi-join against a per-key aggregate of dest. */
+    * consolidate (reference utils.js:83), move (utils.js:161) and the
+    * "already in destination" exclusion (preparation.js:134): one row
+    * (src_id, dest_id, is_new) per src row. A row whose `key` exists in
+    * the destination maps to the (minimum) dest id with that key, is_new
+    * = 0. With `uuidCol`, a row left unmatched on the key matches on the
+    * uuid instead. Every other row is new: is_new = 1 and dest_id null
+    * until [[numberNew]] numbers it.
+    *
+    * One pass over src: it left-joins the per-key destination aggregate
+    * and, with `uuidCol`, the per-uuid one. Each aggregate carries a hit
+    * marker, and is_new comes from the markers, never from whether
+    * dest_id is null: a destination key whose ids are all NULL still
+    * matches, with a null dest_id. */
   def matchDecision(src: DataFrame, dest: DataFrame, key: Seq[String], idCol: String,
                     uuidCol: Option[String]): DataFrame = {
-    def destIds(on: String*) = dest.groupBy(on.map(col): _*)
-      .agg(min(col(idCol)).cast(LongType).as("dest_id"))
-    def decided(rows: DataFrame, destId: Column, isNew: Int) =
-      rows.select(col(idCol).cast(LongType).as("src_id"), destId.as("dest_id"), lit(isNew).as("is_new"))
-    val destK = destIds(key: _*)
-    val afterKey = src.join(destK, key, "left_anti")
-    val (byUuid, rest) = uuidCol match {
-      case Some(u) =>
-        val destU = destIds(u)
-        (Seq(decided(afterKey.join(destU, Seq(u)), col("dest_id"), 0)),
-          afterKey.join(destU, Seq(u), "left_anti"))
-      case None => (Nil, afterKey)
+    val legs = ("k" -> key) +: uuidCol.map(u => "u" -> Seq(u)).toSeq
+    val joined = legs.foldLeft(src) { case (df, (leg, on)) =>
+      df.join(dest.groupBy(on.map(col): _*)
+          .agg(min(col(idCol)).cast(LongType).as(s"__${leg}_id"))
+          .withColumn(s"__${leg}_hit", lit(true)), on, "left")
     }
-    ((decided(src.join(destK, key), col("dest_id"), 0) +: byUuid) :+
-      decided(rest, lit(null).cast(LongType), 1)).reduce(_ unionAll _)
+    // the first leg that hits decides
+    val destId = legs.foldRight(lit(null).cast(LongType)) { case ((leg, _), rest) =>
+      when(col(s"__${leg}_hit"), col(s"__${leg}_id")).otherwise(rest)
+    }
+    val hit = legs.map { case (leg, _) => col(s"__${leg}_hit").isNotNull }.reduce(_ || _)
+    joined.select(col(idCol).cast(LongType).as("src_id"), destId.as("dest_id"),
+      when(hit, 0).otherwise(1).as("is_new"))
   }
 
   /** A decision's id map: the is_new = 0 rows as decided, the is_new =
-    * 1 rows numbered contiguously past `start` in src-id order. The
-    * filters prune the union's other legs at planning time, so the map
-    * scans and joins exactly what the decision does. `cutBlocks` is
-    * [[assignSequentialIds]]'. */
-  def numberNew(decision: DataFrame, start: Long, cutBlocks: Boolean = true): DataFrame =
+    * 1 rows numbered contiguously past `start` in src-id order. Lazy,
+    * like [[assignSequentialIds]]. */
+  def numberNew(decision: DataFrame, start: Long): DataFrame =
     decision.filter(col("is_new") === 0).unionAll(
       assignSequentialIds(decision.filter(col("is_new") === 1).select(col("src_id")),
-          "src_id", "dest_id", start, cutBlocks)
+          "src_id", "dest_id", start)
         .select(col("src_id"), col("dest_id"), lit(1).as("is_new")))
 
   /** Metadata dedup-merge by natural key (reference utils.js:83
@@ -152,10 +123,13 @@ object MergeOps {
     * the destination map to the (minimum) existing dest id; the rest get
     * fresh contiguous ids past the destination's max id.
     *
-    * Returns the id map: (src_id, dest_id, is_new).
+    * Returns the id map, (src_id, dest_id, is_new), cut
+    * ([[graft.operators.State.cut]]) once as [[Orchestrator.idMaps]] cuts
+    * its maps: every consumer reads the materialized map.
     */
   def consolidate(src: DataFrame, dest: DataFrame, naturalKey: Seq[String], idCol: String): DataFrame =
-    numberNew(matchDecision(src, dest, naturalKey, idCol, None), Orchestrator.maxId(dest, idCol))
+    graft.operators.State.cut(
+      numberNew(matchDecision(src, dest, naturalKey, idCol, None), Orchestrator.maxId(dest, idCol)))
 
   /** Consolidation where one comparison column must itself be
     * rewritten through an already-established id map before matching
@@ -176,12 +150,10 @@ object MergeOps {
 
   /** Foreign-key rewrite through an id map (reference
     * person-users.js:223 `beehive.personMap.get(row[...])` per row).
-    * The map rides a join. By default (broadcastMap=false) the join
-    * strategy is Spark's size-based auto-broadcast: metadata-sized
-    * maps broadcast, person-scale maps shuffle-join on the fk — a
-    * FORCED broadcast of a fact-sized map would OOM the driver at
-    * 100 TB. Pass broadcastMap=true only when the caller KNOWS the
-    * map is dimension-sized and wants the hint pinned.
+    * The map rides a join whose strategy is Spark's size-based
+    * auto-broadcast: metadata-sized maps broadcast, person-scale maps
+    * shuffle-join on the fk — a FORCED broadcast of a fact-sized map
+    * would OOM the driver at 100 TB.
     *
     * `joinType` is part of the operator's semantics, chosen per call
     * site: "inner" DROPS children whose FK is missing from the map
@@ -207,16 +179,14 @@ object MergeOps {
     * cheap); hot-key tasks shrink ×buckets. Same rows either way
     * (spec-pinned in OrchestratorSpec). */
   def remapFk(child: DataFrame, fkCol: String, idMap: DataFrame,
-              newCol: String, broadcastMap: Boolean = false,
-              joinType: String = "inner", saltBuckets: Int = 0): DataFrame = {
+              newCol: String, joinType: String = "inner", saltBuckets: Int = 0): DataFrame = {
     val base = idMap.select(col("src_id").as("__fk_src"), col("dest_id").as(newCol))
-    val (factSide, mapSide0, saltCols) =
+    val (factSide, mapSide, saltCols) =
       if (saltBuckets > 0)
         (child.withColumn("__salt_f", pmod(hash(child.columns.toIndexedSeq.map(col): _*), lit(saltBuckets))),
           base.withColumn("__salt_d", explode(sequence(lit(0), lit(saltBuckets - 1)))),
           Seq("__salt_f", "__salt_d"))
       else (child, base, Nil)
-    val mapSide = if (broadcastMap) broadcast(mapSide0) else mapSide0
     val keyCond = factSide(fkCol) === col("__fk_src")
     val cond =
       if (saltBuckets > 0) keyCond && col("__salt_f") === col("__salt_d") else keyCond
@@ -276,22 +246,13 @@ object MergeOps {
     }.reduce(_ unionAll _)
   }
 
-  /** "Already in destination" exclusion (reference preparation.js:134):
-    * a src row is excluded when it matches dest on the composite
-    * natural key OR on uuid. OR-of-equijoins is expressed as two
-    * semi-joins + union + distinct — each leg stays an equi-join the
-    * planner can broadcast/shuffle correctly (never a cartesian).
-    */
-  def excludeMoved(src: DataFrame, dest: DataFrame, naturalKey: Seq[String],
-                   uuidCol: String, idCol: String): DataFrame = {
-    val byKey = src.join(dest.select(naturalKey.map(col): _*).distinct(), naturalKey, "left_semi")
-    val byUuid = src.join(dest.select(col(uuidCol)).distinct(), Seq(uuidCol), "left_semi")
-    byKey.select(col(idCol)).unionAll(byUuid.select(col(idCol))).distinct()
-  }
-
   /** Audit counts (reference utils.js:28 getCount, used before/after
-    * each mover): one row per table. Parquet answers count(*) from
-    * row-group metadata — no data scan. */
+    * each mover): one row per table. Each count is a scan job: graft
+    * reads parquet through Spark's V1 file source, which plans
+    * count(*) as `Scan parquet` with an empty read schema — its tasks
+    * read the files' footers and row-group row counts, no column pages.
+    * The footer-only answer (`spark.sql.parquet.aggregatePushDown`)
+    * applies to DSv2 scans, not to this path. */
   def auditCounts(tables: Seq[(String, DataFrame)]): DataFrame =
     tables.map { case (name, df) =>
       df.agg(count(lit(1)).as("n_rows")).select(lit(name).as("table_name"), col("n_rows"))

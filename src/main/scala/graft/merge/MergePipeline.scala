@@ -15,9 +15,10 @@ import graft.sources.Tables
   * orders (children) get contiguous new order ids past the dest max
   * and their o_custkey rewritten; output is the merged orders table.
   *
-  * Plan shape at scale: one broadcast of the (small) id map into the
-  * orders join when it fits, one range-sort for id assignment, one
-  * union — no driver-side state.
+  * Plan shape at scale: one broadcast of the (small, cut) id map into
+  * the orders join when it fits, one lazy block-rank numbering for id
+  * assignment ([[MergeOps.assignSequentialIds]]), one union — no
+  * driver-side state. The merged output is memoized whole.
   */
 object MergePipeline {
 

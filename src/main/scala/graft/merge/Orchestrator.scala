@@ -26,10 +26,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * that would OOM the driver on a fact-sized map).
   *
   * Scale notes (100 TB): per-table work is the m1/m2/m9 shape — one
-  * block rank for id assignment, semi/anti-joins for exclusion, map
-  * joins for FK rewrite. The orchestrator adds NO driver state beyond
-  * the spec list and NO extra shuffles: id maps are cut DataFrames,
-  * broadcast when dimension-sized, shuffled when person-scale.
+  * pass of left joins for the match decision, one block rank for id
+  * assignment, map joins for FK rewrite. The orchestrator adds NO
+  * driver state beyond the spec list and NO extra shuffles: id maps are
+  * cut DataFrames, broadcast when dimension-sized, shuffled when
+  * person-scale.
   */
 object Orchestrator {
 
@@ -169,9 +170,9 @@ object Orchestrator {
     * with idCol/fks/selfFks REWRITTEN IN PLACE, plus lineage columns
     * `src_<idCol>` (original id), `instance` ('src'/'dest') and
     * `merge_source` (which source instance a row came from —
-    * orchestrator.js:92 insertSource). `report` is the table's row of
-    * the merge report, counted as [[dryRun]] counts it. */
-  final case class MergedTable(merged: DataFrame, idMap: DataFrame, report: DataFrame)
+    * orchestrator.js:92 insertSource). `counted` is what [[report]]
+    * counts for the table: one (__src, is_new) row per counted row. */
+  final case class MergedTable(merged: DataFrame, idMap: DataFrame, counted: DataFrame)
 
   /** Kahn topological order over fk dependencies. Self-FKs are not
     * edges (they resolve against the table's own completed map).
@@ -259,8 +260,7 @@ object Orchestrator {
                       maps: String => DataFrame, start: => Long): DataFrame =
     spec.mode match {
       case MergeMode.SharedPk(_) => decide(s, d, spec, maps)
-      // uncut: idMaps cuts the whole map once
-      case _ => MergeOps.numberNew(decide(s, d, spec, maps), start, cutBlocks = false)
+      case _ => MergeOps.numberNew(decide(s, d, spec, maps), start)
     }
 
   /** Schema-correct EMPTY id map (Keyless tables emit no map but
@@ -269,23 +269,40 @@ object Orchestrator {
     src.sparkSession.range(0).select(
       col("id").as("src_id"), col("id").as("dest_id"), lit(1).as("is_new"))
 
-  /** One table's report row — (table_name, mode, src_rows,
-    * already_in_dest, would_insert) — the one place the dry run and the
-    * real run count, in one aggregate pass. already_in_dest and
-    * would_insert count `decided`'s is_new = 0 and is_new = 1 rows (a
-    * keyed table's decision or id map, a keyless table's decided
-    * batch). src_rows counts `decided` too, or `rawSrc` when given: a
-    * keyless table reports its raw src rows, batch duplicates
-    * included. */
-  private def reportRow(spec: TableSpec, decided: DataFrame, rawSrc: Option[DataFrame]): DataFrame =
+  /** A table's rows for [[report]]: one (__src, is_new) row per row of
+    * `decided` (a keyed table's decision or id map, a keyless table's
+    * decided batch), each counted as a src row — unless `rawSrc` is
+    * given: a keyless table counts its raw src rows instead, batch
+    * duplicates included. */
+  private def counted(decided: DataFrame, rawSrc: Option[DataFrame] = None): DataFrame =
     (rawSrc.map(_.select(lit(true).as("__src"), lit(null).cast(IntegerType).as("is_new"))).toSeq :+
       decided.select(lit(rawSrc.isEmpty).as("__src"), col("is_new")))
       .reduce(_ unionAll _)
+
+  /** The merge report — (table_name, mode, src_rows, already_in_dest,
+    * would_insert), one row per table in `tables`' order — the one place
+    * the dry run and the real run count. One aggregate over every
+    * table's [[counted]] rows, so one shuffle however many tables: src
+    * rows, is_new = 0 rows and is_new = 1 rows per table position. A
+    * table with no rows still gets its row of zeros. */
+  def report(tables: Seq[(TableSpec, DataFrame)]): DataFrame = {
+    val pos = col("__pos")
+    // one row per table that counts nothing
+    val every = tables.head._2.sparkSession.range(0, tables.size, 1, 1).select(
+      col("id").cast(IntegerType).as("__pos"), lit(false).as("__src"), lit(null).cast(IntegerType).as("is_new"))
+    def label(f: TableSpec => String) = element_at(typedLit(tables.map(t => f(t._1))), pos + 1)
+    tables.zipWithIndex.foldLeft(every) { case (all, ((_, rows), i)) =>
+        all.unionAll(rows.select(lit(i).as("__pos"), col("__src"), col("is_new")))
+      }
+      .groupBy(pos)
       .agg(count(when(col("__src"), 1)).as("src_rows"),
         count(when(col("is_new") === 0, 1)).as("already_in_dest"),
         count(when(col("is_new") === 1, 1)).as("would_insert"))
-      .select(lit(spec.name).as("table_name"), lit(modeLabel(spec.mode)).as("mode"),
+      // a few rows: put in table order without a range shuffle
+      .coalesce(1).sortWithinPartitions(pos)
+      .select(label(_.name).as("table_name"), label(t => modeLabel(t.mode)).as("mode"),
         col("src_rows"), col("already_in_dest"), col("would_insert"))
+  }
 
   /** Keyless association-table merge (MergeMode.Keyless): FK rewrite
     * through the parents' completed maps (inner_or_null — the strict
@@ -299,10 +316,10 @@ object Orchestrator {
     *   - naturalKey empty → append-all (gaac.js:100: the destination
     *     mints auto ids the merge never sees).
     * Emits an empty id map — nothing can FK-reference these rows — and
-    * a report row counted from the raw src rows and the batch's
-    * decision (the dry run's row too). Scale: one shuffle per fk map
-    * join + (keyed form) one dedup aggregate on the composite key;
-    * never a window, never a sort. */
+    * its report rows: the raw src rows and the batch's decision (the dry
+    * run's too). Scale: one shuffle per fk map join + (keyed form) one
+    * dedup aggregate on the composite key; never a window, never a
+    * sort. */
   private def keylessMerge(src: DataFrame, dest: DataFrame, spec: TableSpec,
                            maps: String => DataFrame, sourceTag: String): MergedTable = {
     val fkDone0 = spec.fks.foldLeft(src) { case (df, (fkCol, parent)) =>
@@ -333,7 +350,7 @@ object Orchestrator {
       lit("dest").as("instance") :+ lit("dest").as("merge_source")): _*)
     // src_rows counts the RAW src table, batch duplicates included (the
     // gap INSERT IGNORE's affectedRows shows)
-    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), reportRow(spec, decided, Some(src)))
+    MergedTable(destOut.unionByName(srcOut), emptyIdMap(src), counted(decided, Some(src)))
   }
 
   /** Fill `saltedFks` from each OPTED-IN spec's own fk histograms
@@ -411,7 +428,7 @@ object Orchestrator {
 
   /** [[run]] over id maps already built by [[idMaps]] for the same
     * specs and instances: builds only the lazy merged frames and
-    * report rows. */
+    * report rows ([[MergedTable.counted]]). */
   def run(specs: Seq[TableSpec],
           src: String => DataFrame, dest: String => DataFrame,
           sourceTag: String, maps: Map[String, DataFrame]): Map[String, MergedTable] = {
@@ -464,7 +481,7 @@ object Orchestrator {
           col(spec.idCol).cast(LongType).as(s"src_${spec.idCol}") :+
           lit("dest").as("instance") :+
           lit("dest").as("merge_source")).toIndexedSeq: _*)
-      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, reportRow(spec, idMap, None))
+      spec.name -> MergedTable(destOut.unionByName(srcOut), idMap, counted(idMap))
       }
     }.toMap
 
@@ -509,7 +526,7 @@ object Orchestrator {
     * then ROLLBACK): per-table would-happen counts as ONE DataFrame,
     * zero writes. The reference rehearses by executing then rolling
     * back; here each table makes the same single match decision
-    * [[run]] numbers its id map from, and the same report row counts
+    * [[run]] numbers its id map from, and the same [[report]] counts
     * it, so the dry run and the real run report the same numbers for
     * every mode. The dry run allocates ids only where a child's
     * matching reads destination ids — mappedKeys parents and Keyless
@@ -534,15 +551,13 @@ object Orchestrator {
     val maps = idMaps(specs.filter(s => mapNeeded(s.name)), src, dest)
     // a map carries its decision's is_new, which is all a report counts
     val decisions = scala.collection.mutable.Map[String, DataFrame](maps.toSeq: _*)
-    order.map { spec =>
-      if (spec.mode == MergeMode.Keyless)
-        keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").report
-      else {
-        decisions.getOrElseUpdate(spec.name,
-          decide(withMappedKeys(src(spec.name), spec, maps), dest(spec.name), spec, decisions))
-        reportRow(spec, decisions(spec.name), None)
-      }
-    }.reduce(_ unionAll _)
+    report(order.map { spec =>
+      spec -> (
+        if (spec.mode == MergeMode.Keyless)
+          keylessMerge(src(spec.name), dest(spec.name), spec, maps, sourceTag = "").counted
+        else counted(decisions.getOrElseUpdate(spec.name,
+          decide(withMappedKeys(src(spec.name), spec, maps), dest(spec.name), spec, decisions))))
+    })
   }
 
   private def modeLabel(mode: MergeMode): String = mode match {
@@ -553,35 +568,22 @@ object Orchestrator {
   }
 
   /** Declarative exclusion set for one table (preparation.js:134): the
-    * src ids that would NOT move because a dest row matches on the
-    * spec's cross-instance identity (effectiveKey: naturalKey +
-    * mappedKeys, the SAME composite the Move-mode id map uses — this
-    * is exactly its is_new=0 side, exposed as an id list) OR, for a
-    * Move spec, its uuid — the id map's rule. Specs with mappedKeys
-    * need the parents' completed maps. */
+    * src ids that would NOT move — its match decision's is_new = 0 side
+    * ([[decide]], the rule its id map numbers from), under the spec's
+    * idCol name and type. A Consolidate or Move spec matches on its
+    * effective key (naturalKey + mappedKeys), a Move spec then on its
+    * uuid; a SharedPk row is excluded iff its parent row did not move.
+    * Specs with mappedKeys or a SharedPk parent need the parents'
+    * completed maps. */
   def excludedIds(src: DataFrame, dest: DataFrame, spec: TableSpec,
                   parentMaps: String => DataFrame =
-                    name => sys.error(s"excludedIds: parent map for '$name' required by mappedKeys"))
+                    name => sys.error(s"excludedIds: parent map for '$name' required"))
   : DataFrame = {
-    spec.mode match {
-      case MergeMode.Keyless =>
-        sys.error(s"excludedIds: keyless table '${spec.name}' has no ids to exclude")
-      case MergeMode.SharedPk(p) =>
-        // excluded iff the parent row did not move (patient loop shape)
-        src.select(col(spec.idCol).cast(LongType).as("__id"))
-          .join(parentMaps(p).filter(col("is_new") === 0).select(col("src_id").as("__id")),
-            Seq("__id"), "left_semi")
-          .select(col("__id").as(spec.idCol)).distinct()
-      case _ =>
-        val s = withMappedKeys(src, spec, parentMaps)
-        val key = effectiveKey(spec)
-        uuidLeg(spec) match {
-          case Some(u) => MergeOps.excludeMoved(s, dest, key, u, spec.idCol)
-          case None =>
-            s.join(dest.select(key.map(col): _*).distinct(), key, "left_semi")
-              .select(col(spec.idCol)).distinct()
-        }
-    }
+    require(spec.mode != MergeMode.Keyless,
+      s"excludedIds: keyless table '${spec.name}' has no ids to exclude")
+    decide(withMappedKeys(src, spec, parentMaps), dest, spec, parentMaps)
+      .filter(col("is_new") === 0)
+      .select(col("src_id").cast(src.schema(spec.idCol).dataType).as(spec.idCol))
   }
 
   /** UUID handling for moved rows (reference utils.js:55 config flag

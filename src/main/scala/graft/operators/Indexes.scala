@@ -75,35 +75,6 @@ object Indexes {
     }
   }
 
-  /** As [[swap]], but for iterative state where the NEW generation is
-    * derived FROM the previous one (d7's label propagation): persist
-    * `df`, run `materialize` to force it (persist is lazy — swapping
-    * first would release the old generation before the new one ever
-    * computed, so every round would recompute all prior rounds from
-    * lineage, O(rounds²)), and only THEN release the previous
-    * generation. Returns the persisted frame and the action's result. */
-  def swapWith[A](key: String, df: DataFrame)(materialize: DataFrame => A): (DataFrame, A) = {
-    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    // if the action dies (executor lost, task failure past retries),
-    // release the half-born generation before rethrowing — otherwise it
-    // stays persisted with no registry entry and only clear() could
-    // ever free it (the unbounded-cache problem this registry exists
-    // to prevent); the previous generation stays registered and valid
-    val a = try materialize(p) catch {
-      case e: Throwable => p.unpersist(blocking = false); throw e
-    }
-    live.synchronized {
-      live.put(key, p).foreach { prev =>
-        // same canonical-plan-match guard as swap (iterative
-        // generations always differ — new wraps old's cache — but a
-        // degenerate same-plan call must not deregister itself)
-        if (!prev.queryExecution.analyzed.sameResult(p.queryExecution.analyzed))
-          prev.unpersist(blocking = false)
-      }
-    }
-    (p, a)
-  }
-
   /** Per-key in-flight computes: owner thread + completion latch.
     * (Key, value-identity)-removed on completion; waiting threads
     * re-check the registry once the latch trips. */

@@ -1219,8 +1219,8 @@ object TextAnalysis {
       var r = 0
       var dry = false
       // drops in finally: a failed round must release BOTH live corpus
-      // generations (the registry's bounded-cache contract — the old
-      // swapWith path freed its half-born generation on failure)
+      // generations, the half-built one included (the registry's
+      // bounded-cache contract)
       try while (r < rounds && !dry) {
         // pair_counts collapses each doc to its pair histogram BEFORE
         // the aggregate (one map per doc instead of one row per

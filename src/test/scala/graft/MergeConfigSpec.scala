@@ -208,6 +208,28 @@ class MergeConfigSpec extends AnyFunSuite {
     assert(rows(dryRun = false) == dry)
   }
 
+  test("an empty src table reports its row of zeros, in table order, in both runs") {
+    val base = java.nio.file.Files.createTempDirectory("graft-cfg-empty").toString
+    val (srcDir, destDir, outDir) = (s"$base/src", s"$base/dest", s"$base/out")
+    Seq((1L, "alpha", "u1"), (2L, "beta", "u2"))
+      .toDF("id", "name", "uuid").write.parquet(s"$srcDir/parent.parquet")
+    Seq((10L, "alpha", "u1"), (11L, "gamma", "u3"))
+      .toDF("id", "name", "uuid").write.parquet(s"$destDir/parent.parquet")
+    // child has no src rows at all
+    Seq.empty[(Long, Long, String)]
+      .toDF("id", "parent_id", "payload").write.parquet(s"$srcDir/child.parquet")
+    Seq((500L, 10L, "x"))
+      .toDF("id", "parent_id", "payload").write.parquet(s"$destDir/child.parquet")
+    val cfg = MergeConfig.fromJson(configJson(srcDir, destDir, outDir, genUuids = false))
+    def rows(dryRun: Boolean) = MergeConfig.execute(spark, cfg, dryRun).collect()
+      .map(r => (r.getAs[String]("table_name"), r.getAs[String]("mode"),
+        r.getAs[Long]("src_rows"), r.getAs[Long]("already_in_dest"), r.getAs[Long]("would_insert")))
+      .toSeq
+    val want = Seq(("parent", "consolidate", 2L, 1L, 1L), ("child", "move", 0L, 0L, 0L))
+    assert(rows(dryRun = true) == want)
+    assert(rows(dryRun = false) == want)
+  }
+
   test("source-once guard: re-merging a processed location throws; persist publishes id maps") {
     val (srcDir, destDir, outDir) = writeInstances()
     val cfg = MergeConfig.fromJson(

@@ -466,6 +466,46 @@ class OrchestratorSpec extends AnyFunSuite {
       .filter($"is_new" === 0).collect().map(_.getAs[Long]("src_id")).toSet
     assert(kept == Set(1L))
     assert(excluded == kept)
+
+    // every keyed mode: Consolidate, Move with a uuid (a key-only, a
+    // uuid-only, a both and a new row), mappedKeys (attr) and SharedPk
+    // (profile) exclude exactly their id map's is_new = 0 src ids, under
+    // the spec's idCol name and type
+    val (fixture, fsrc, fdst) = cutFixture()
+    val moved = TableSpec("moved", "id", Seq("name"), MergeMode.Move, uuidCol = Some("uuid"))
+    val specs = fixture :+ moved
+    val src = fsrc + ("moved" -> Seq((1, "alpha", "u1"), (2, "beta", "u9"), (3, "cat", "u3"),
+      (4, "dog", "u4")).toDF("id", "name", "uuid"))
+    val dst = fdst + ("moved" -> Seq((10, "alpha", "u0"), (11, "gamma", "u9"), (12, "cat", "u3"))
+      .toDF("id", "name", "uuid"))
+    val r = Orchestrator.run(specs, src, dst, "inst2")
+    val maps = specs.filter(_.mode != MergeMode.Keyless).map(t => t.name -> r(t.name).idMap).toMap
+    for (t <- specs if t.mode != MergeMode.Keyless) {
+      val ids = Orchestrator.excludedIds(src(t.name), dst(t.name), t, maps)
+      assert(ids.schema.map(f => f.name -> f.dataType) ==
+        Seq(t.idCol -> src(t.name).schema(t.idCol).dataType), t.name)
+      val got = ids.collect().map(x => x.get(0).asInstanceOf[Number].longValue).toSeq.sorted
+      val want = maps(t.name).filter($"is_new" === 0).select($"src_id").as[Long].collect().toSeq.sorted
+      assert(got.nonEmpty && got == want, t.name)
+    }
+    assert(Orchestrator.excludedIds(src("moved"), dst("moved"), moved).as[Int].collect().toSet ==
+      Set(1, 2, 3))
+  }
+
+  test("the report counts every table in one aggregate, in table order, in both runs") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val (specs, src, dst) = cutFixture()
+    val r = Orchestrator.run(specs, src, dst, "inst2")
+    val order = Orchestrator.topoOrder(specs)
+    for ((run, report) <- Seq(
+        "dry" -> Orchestrator.dryRun(specs, src, dst),
+        "real" -> Orchestrator.report(order.map(t => t -> r(t.name).counted)))) {
+      val counting = report.queryExecution.optimizedPlan.collect {
+        case a: Aggregate if a.aggregateExpressions.exists(_.name == "src_rows") => a
+      }
+      assert(counting.length == 1, s"$run run: ${counting.length} aggregates count src_rows")
+      assert(report.collect().map(_.getAs[String]("table_name")).toSeq == order.map(_.name), run)
+    }
   }
 
   test("a NULL src id on a row to insert fails the merge instead of vanishing from it") {
@@ -531,7 +571,7 @@ class OrchestratorSpec extends AnyFunSuite {
     // src_rows counts the RAW table; already/would count POST-dedup keys
     assert(dry("user_role") == (("keyless", 3L, 1L, 1L)))
     // the real run reports the same row for every table
-    val reported = specs.map(t => r(t.name).report).reduce(_ unionAll _).collect()
+    val reported = Orchestrator.report(specs.map(t => t -> r(t.name).counted)).collect()
       .map(x => x.getAs[String]("table_name") ->
         ((x.getAs[String]("mode"), x.getAs[Long]("src_rows"),
           x.getAs[Long]("already_in_dest"), x.getAs[Long]("would_insert")))).toMap
@@ -652,7 +692,8 @@ class OrchestratorSpec extends AnyFunSuite {
     val (dry, dryCuts) = persisting(Orchestrator.dryRun(specs, src, dst))
     assert(dryCuts == 2, s"$dryCuts cuts")
     val counts = dry.collect().map(x => x.getAs[String]("table_name") -> x.getAs[Long]("would_insert")).toMap
-    assert(counts == r.map { case (n, mt) => n -> mt.report.head().getAs[Long]("would_insert") })
+    assert(counts == Orchestrator.report(specs.map(t => t -> r(t.name).counted)).collect()
+      .map(x => x.getAs[String]("table_name") -> x.getAs[Long]("would_insert")).toMap)
   }
 
   test("with spark.graft.checkpointDir set, run's id-map cuts are reliable checkpoints") {

@@ -150,21 +150,18 @@ class QueriesSpec extends AnyFunSuite {
       "q34_skyline",    // strictly-later running min over the date-DOMAIN-bounded front candidates
       "e26_hazard",     // at-risk cumulative counts over the weeks-bounded calendar
       "q36_rfm",        // three blockCum level-2 offset frames (≤#blocks aggregate rows each)
-      // r14-opt: assignSequentialIds' numbering is a two-level prefix
-      // rank (the blockCum convention) — its ONLY partition-less
-      // window orders the ≤#blocks per-block totals (aggregate-
-      // bounded, q33/q36's exact justification) above the eagerly-cut
-      // ranked frame. Every standalone consolidate/move query
-      // therefore carries one:
-      "m1_consolidate_meta", "m2_remap_fk", "m9_seq_assign",
-      "m11_selfref_remap", "m12_consolidate_fkmapped",
-      "m17_multi_source", "m19_delta_merge"
+      // assignSequentialIds' numbering is a two-level prefix rank (the
+      // blockCum convention) — its ONLY partition-less window orders
+      // the ≤#blocks per-block totals (aggregate-bounded, q33/q36's
+      // exact justification). m9 numbers lazily in its own plan:
+      "m9_seq_assign"
       // (m13_full_pipeline left this set when its orchestrator run
       // became a shared memoized artifact: the instance() fixture's
       // global lag window now lives inside the cached frame's hidden
       // lineage — fixture construction cost, paid once per session.
       // m16_circular_fk, m30_shared_pk and m31_assoc_move left it when
-      // Orchestrator.run began cutting every id map: the numbering's
+      // Orchestrator.run began cutting every id map, and m1, m2, m11,
+      // m12, m17 and m19 when MergeOps.consolidate did: the numbering's
       // offsets window is now inside the cut map's hidden lineage.)
     )
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>

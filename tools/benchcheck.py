@@ -19,35 +19,17 @@ import json, re, sys, os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def parse_baseline(path):
-    # collects from EVERY `| query | ... |` table in the file (the
-    # headline table plus per-round gate-row additions); a later row
-    # for the same query overrides an earlier one
+def parse_table(path, header):
+    """Gate values from EVERY `| <header> | ... |` table in the file:
+    header "query" gives the per-query best-knowns (the headline table
+    plus per-round gate-row additions), header "artifact" the per-FAMILY
+    gates of the `_artifacts` warm-up phase (a 3x regression in one
+    family must not hide inside the phase's wall-clock noise). A later
+    row for the same name overrides an earlier one."""
     best = {}
     in_table = False
     for line in open(path):
-        if re.match(r"\|\s*query\s*\|", line):
-            in_table = True
-            continue
-        if in_table:
-            m = re.match(r"\|\s*`?([a-z0-9_]+)`?\s*\|\s*([0-9.]+)\s*\|", line)
-            if m:
-                best[m.group(1)] = float(m.group(2))
-            elif line.startswith("| ---"):
-                continue
-            elif not line.startswith("|"):
-                in_table = False
-    return best
-
-
-def parse_artifact_baseline(path):
-    # per-FAMILY gates for the `_artifacts` warm-up phase, from the
-    # `| artifact | gate_s | ... |` table: a 3x regression in one
-    # family must not hide inside the phase's wall-clock noise
-    best = {}
-    in_table = False
-    for line in open(path):
-        if re.match(r"\|\s*artifact\s*\|", line):
+        if re.match(r"\|\s*" + header + r"\s*\|", line):
             in_table = True
             continue
         if in_table:
@@ -91,16 +73,21 @@ def main():
                                bench.get("tail", ""))
             bench = {"queries": {k: float(v) for k, v in pairs
                                  if k not in ("metric", "value", "sf", "dropped")}}
-    best = parse_baseline(os.path.join(ROOT, "BASELINE.md"))
-    abest = parse_artifact_baseline(os.path.join(ROOT, "BASELINE.md"))
+    best = parse_table(os.path.join(ROOT, "BASELINE.md"), "query")
+    abest = parse_table(os.path.join(ROOT, "BASELINE.md"), "artifact")
     queries = bench.get("queries", {})
 
     regressions, warnings = [], []
     # per-family artifact gates (the _artifacts wall total stays a
     # query-table row; families are multi-second builds, so the noise
-    # floor is 0.5 s). A family with no gate row yet is a warning —
-    # add its clean-run value to BASELINE.md's artifact table.
+    # floor is 0.5 s). A part `family/part` is covered by its family's
+    # row, which gates the whole family's wall (m13_run's time runs to
+    # the end of its last m13_run/<table> step). A family with no gate
+    # row yet is a warning — add its clean-run value to BASELINE.md's
+    # artifact table.
     for name, sec in sorted(bench.get("artifacts", {}).items()):
+        if "/" in name and name.split("/", 1)[0] in abest:
+            continue
         if name in abest:
             if sec > abest[name] * ratio and sec - abest[name] > 0.5:
                 regressions.append((f"_artifacts/{name}", sec, abest[name],
